@@ -397,47 +397,52 @@ def _cap_buckets(banded: DataFrame, max_bucket: int,
     )
 
 
+def _array_pairs(df: DataFrame, arr: str, left: str, right: str,
+                 carry_cols: tuple[str, ...] = (),
+                 symmetric: bool = False) -> DataFrame:
+    """THE pair-expansion kernel of every bucket-collapse site: one
+    ``(*carry_cols, left, right)`` row per pair of elements of each row's
+    ``arr`` array.  Pairs are taken BY POSITION: ``i < j`` emits each
+    unordered pair once with the earlier element on the left (over a
+    sorted array, exactly a self-join's ``a < b`` predicate), and
+    ``symmetric=True`` keeps ``i != j``, both orientations.  A repeated
+    element (collect_list input) therefore pairs with its own copy.
+
+    Two chained posexplodes and a position filter: Generate runs in
+    whole-stage codegen and streams its rows, so a bucket's O(b^2) output
+    is never built inside one row; the hub caps upstream bound each
+    bucket's output."""
+    one = df.select(*carry_cols, arr, F.posexplode(arr).alias("_i", left))
+    two = one.select(
+        *carry_cols, "_i", left, F.posexplode(arr).alias("_j", right)
+    )
+    i, j = F.col("_i"), F.col("_j")
+    return two.filter(i != j if symmetric else i < j).select(
+        *carry_cols, left, right
+    )
+
+
 def _bucket_pair_expansion(banded: DataFrame, group_cols: tuple[str, ...],
                            max_bucket: int,
                            carry_cols: tuple[str, ...] = ()) -> DataFrame:
-    """The r13 bucket-collapse pair expansion, single-sourced (r13 ADVICE:
-    lsh_band_sweep carried a verbatim copy of lsh_candidate_pairs's capped
-    path, so a cap or expansion change could land in one site only): each
-    ``group_cols`` bucket collapses to ONE sorted-ids row via collect_list
-    (partially aggregated map-side), the hub cap is a plain
-    ``size(ids) <= max_bucket`` filter, and the C(b,2) expansion happens
-    row-locally in a HOF bounded by the cap.  ``carry_cols`` (a subset of
+    """The bucket-collapse pair expansion shared by lsh_candidate_pairs and
+    lsh_band_sweep: each ``group_cols`` bucket collapses to ONE sorted-ids
+    row via collect_list (partially aggregated map-side), the hub cap is a
+    plain ``size(ids) <= max_bucket`` filter, and ``_array_pairs`` expands
+    each bucket's i < j pairs.  ``carry_cols`` (a subset of
     ``group_cols``, e.g. lsh_band_sweep's config tag) survive into the
     output next to (doc_a, doc_b); output is distinct over carry + pair.
 
-    Only safe WITH a cap — uncapped, a hub bucket's C(b,2) pair structs
-    would materialize inside ONE row in one task; callers keep their
-    distributed self-join for the ``max_bucket=0/None`` convention."""
+    Callers keep their distributed self-join for the uncapped
+    ``max_bucket=0/None`` convention: there a hub bucket is one unbounded
+    collect row expanded by one task, while the self-join keeps it as
+    rows that AQE's skew-join handling can split across tasks."""
     buckets = banded.groupBy(*group_cols).agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
-    )
-    ids = F.col("ids")
-    pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    return (
-        buckets.filter(
-            (F.size("ids") >= 2) & (F.size("ids") <= max_bucket)
-        )
-        .select(*carry_cols, F.explode(pairs).alias("p"))
-        .select(
-            *carry_cols,
-            F.col("p.doc_a").alias("doc_a"),
-            F.col("p.doc_b").alias("doc_b"),
-        )
-        .distinct()
-    )
+    ).filter(F.size("ids") <= max_bucket)
+    return _array_pairs(
+        buckets, "ids", "doc_a", "doc_b", carry_cols
+    ).distinct()
 
 
 def lsh_candidate_pairs(signatures: DataFrame, n_hashes: int = 32,
@@ -456,17 +461,15 @@ def lsh_candidate_pairs(signatures: DataFrame, n_hashes: int = 32,
     (band, band_hash, sorted ids) row via collect_list (partially
     aggregated map-side, so the exchange moves thin per-bucket rows), the
     hub cap becomes a plain ``size(ids) <= max_bucket`` filter — no
-    window, no per-partition sort — and the C(b,2) pair expansion happens
-    INSIDE a higher-order function bounded by the cap, never through a
-    join.  This is the `_basket_sets` discipline from operators/graph.py
+    window, no per-partition sort — and each bucket's C(b,2) pairs come
+    out of the ``_array_pairs`` kernel, bounded by the cap, never through
+    a join.  This is the `_basket_sets` discipline from operators/graph.py
     applied to the LSH band join: measured at sf0.1 (same-session A/B,
     min-of-3, noop sink) window-cap+self-join 0.92s vs this path 0.51s
     for the candidate stage, with the pair multiset identical (parity
-    asserted by test).  The HOF expansion is only safe WITH a cap —
-    uncapped, a hub bucket's C(b,2) pair structs would materialize inside
-    ONE row in one task — so ``max_bucket=0/None`` (the debug/eval
-    convention) keeps the distributed reference self-join, exactly like
-    ``graph._basket_pair_edges``.
+    asserted by test).  ``max_bucket=0/None`` (the debug/eval convention)
+    keeps the distributed reference self-join, exactly like
+    ``graph._basket_pair_edges`` (see ``_bucket_pair_expansion``).
 
     ``checkable=True`` keys the bands by the concatenated signature values
     (exactly mirrorable in SQL) instead of murmur3 — band equality is the
@@ -1400,8 +1403,8 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
     if max_bucket:
         # bucket-collapse pair expansion (the lsh_candidate_pairs r13
         # shape — see its docstring): one collect_list exchange, cap as a
-        # size filter, C(b,2) expansion row-local in a HOF bounded by the
-        # cap.  A doc contributes one row per chunk_id, so doc_ids are
+        # size filter, the _array_pairs kernel over (doc_id, simhash)
+        # structs.  A doc contributes one row per chunk_id, so doc_ids are
         # unique within a bucket and the sorted i<j expansion equals the
         # self-join's doc_a < doc_b (sort_array on the struct orders by
         # doc_id, its first field).  Uncapped falls back to the
@@ -1410,28 +1413,15 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
             F.sort_array(
                 F.collect_list(F.struct("doc_id", "simhash"))
             ).alias("ms")
-        )
-        ms = F.col("ms")
-        pair_structs = F.flatten(
-            F.transform(
-                ms,
-                lambda x, i: F.transform(
-                    F.slice(ms, i + F.lit(2), F.size(ms)),
-                    lambda y: F.struct(
-                        x["doc_id"].alias("doc_a"),
-                        y["doc_id"].alias("doc_b"),
-                        x["simhash"].alias("sig_a"),
-                        y["simhash"].alias("sig_b"),
-                    ),
-                ),
-            )
-        )
+        ).filter(F.size("ms") <= max_bucket)
         cand = (
-            buckets.filter(
-                (F.size("ms") >= 2) & (F.size("ms") <= max_bucket)
+            _array_pairs(buckets, "ms", "a", "b")
+            .select(
+                F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"),
+                F.col("a.simhash").alias("sig_a"),
+                F.col("b.simhash").alias("sig_b"),
             )
-            .select(F.explode(pair_structs).alias("p"))
-            .select("p.doc_a", "p.doc_b", "p.sig_a", "p.sig_b")
             .distinct()
         )
     else:
@@ -1596,20 +1586,18 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str,
         # the exact posting join): each (lang, shingle) posting collapses
         # to ONE sorted-ids row via collect_list (partially aggregated
         # map-side), the df cap becomes a plain size filter — no window,
-        # no per-partition sort — and the C(df,2) intersection pairs
-        # expand row-locally in a HOF bounded by the cap instead of
-        # through the self-join (which re-sorted the full posting table
-        # twice for its SMJ).  A doc appears at most once per posting
-        # (shingle() explodes array_distinct), so the sorted i<j
-        # expansion is exactly the join's doc_a < doc_b predicate and the
-        # per-pair row count is unchanged — n_inter is the same multiset
-        # (pinned by test_ngram_binding_cap_matches_oracle and the hub
-        # test).  Set sizes re-derive from the SAME collapsed frame
-        # (explode of ids), so the two consumers share one exchange
-        # subtree (ReuseExchange / AQE stage reuse — the exchange carries
-        # identical columns for both).  Only safe WITH a cap: uncapped, a
-        # hub posting's C(df,2) pair structs would materialize inside ONE
-        # row in one task (the _bucket_pair_expansion rule).
+        # no per-partition sort — and the C(df,2) intersection pairs come
+        # out of the _array_pairs kernel, bounded by the cap, instead of
+        # the self-join (which re-sorted the full posting table twice for
+        # its SMJ).  A doc appears at most once per posting (shingle()
+        # explodes array_distinct), so the sorted i<j expansion is
+        # exactly the join's doc_a < doc_b predicate and the per-pair row
+        # count is unchanged — n_inter is the same multiset (pinned by
+        # test_ngram_binding_cap_matches_oracle and the hub test).  Set
+        # sizes re-derive from the SAME collapsed frame (explode of ids),
+        # so the two consumers share one exchange subtree (ReuseExchange /
+        # AQE stage reuse — the exchange carries identical columns for
+        # both).
         buckets = sh.groupBy("lang", "shingle").agg(
             F.sort_array(F.collect_list("doc_id")).alias("ids")
         ).filter(F.size("ids") <= max_posting)
@@ -1618,29 +1606,14 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str,
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("set_size"))
         )
-        ids = F.col("ids")
-        pair_structs = F.flatten(
-            F.transform(
-                ids,
-                lambda x, i: F.transform(
-                    F.slice(ids, i + F.lit(2), F.size(ids)),
-                    lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                ),
-            )
-        )
         inter = (
-            buckets.filter(F.size("ids") >= 2)
-            .select(F.explode(pair_structs).alias("p"))
-            .select(
-                F.col("p.doc_a").alias("doc_a"),
-                F.col("p.doc_b").alias("doc_b"),
-            )
+            _array_pairs(buckets, "ids", "doc_a", "doc_b")
             .groupBy("doc_a", "doc_b")
             .agg(F.count(F.lit(1)).alias("n_inter"))
         )
     else:
         # uncapped debug/eval convention: keep the distributed reference
-        # self-join (see the HOF hub rule above)
+        # self-join (see _bucket_pair_expansion)
         sizes = sh.groupBy("doc_id", "lang").agg(
             F.count(F.lit(1)).alias("set_size")
         )
@@ -2116,7 +2089,7 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str,
     # computes every config's buckets in one exchange, and one distinct
     # covers all configs — the `bands` tag keeps per-config pair sets
     # disjoint, so this is exactly the union of the per-config distincts.
-    # The size-capped HOF pair expansion is _bucket_pair_expansion — the
+    # The size-capped pair expansion is _bucket_pair_expansion — the
     # SAME helper lsh_candidate_pairs's capped path uses (the cap applies
     # per (bands, band, band_hash) bucket, identical to each config's own
     # run); the unchanged oracle pins the equivalence.

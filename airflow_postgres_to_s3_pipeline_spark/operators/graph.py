@@ -25,12 +25,17 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from airflow_postgres_to_s3_pipeline_spark.cache import tracked_persist
 from airflow_postgres_to_s3_pipeline_spark.catalog import table
-from airflow_postgres_to_s3_pipeline_spark.operators.dedup import _cap_buckets
+from airflow_postgres_to_s3_pipeline_spark.operators.dedup import (
+    _array_pairs,
+    _cap_buckets,
+)
 
 ORACLES: dict[str, str] = {}
 
@@ -106,8 +111,8 @@ def _basket_pair_edges(spark: SparkSession, sf_dir: str,
     partially aggregated map-side, so the exchange moves thin
     (order, part-set) rows), the cap becomes a plain ``size(parts) <=
     max_basket`` filter — no window, no sort — and the C(b,2) expansion
-    happens INSIDE a higher-order function, bounded by the cap, never
-    through a join.  Measured at sf0.1 (interleaved same-session A/B,
+    is the ``dedup._array_pairs`` kernel, bounded by the cap, never a
+    join.  Measured at sf0.1 (interleaved same-session A/B,
     min-of-4, triangle_count end-to-end): self-join+window-cap 8.18s vs
     this path 6.90s — a 16% cut that includes erasing the cap's
     0.4-0.7s window-sort premium.  The hub bound is structural: an
@@ -115,12 +120,11 @@ def _basket_pair_edges(spark: SparkSession, sf_dir: str,
     basket reaches the filter as one Θ(b) collect_set row, never Θ(b)
     shuffled rows feeding a C(b,2) join probe).
 
-    The HOF expansion is only safe WITH a cap: uncapped, a hub order's
-    C(b,2) pair structs would materialize inside ONE row in one task —
-    a Θ(b²) single-task allocation strictly worse than the self-join,
-    which at least spreads that output across shuffle partitions
-    (r11 review).  ``max_basket=0/None`` (the debug/eval convention)
-    therefore takes the distributed reference self-join path.
+    Uncapped, a hub order would be one unbounded collect_set row whose
+    C(b,2) pairs one task generates; the self-join keeps it as rows that
+    AQE's skew-join handling can split across tasks, so
+    ``max_basket=0/None`` (the debug/eval convention) takes that
+    distributed reference path.
 
     sort_array makes the per-order pair orientation deterministic; the
     i < j expansion over a sorted set is exactly the self-join's
@@ -129,7 +133,9 @@ def _basket_pair_edges(spark: SparkSession, sf_dir: str,
     """
     if not max_basket:
         return _pairs_self_join(_baskets(spark, sf_dir, 0))
-    return _pairs_from_sets(_basket_sets(spark, sf_dir, max_basket))
+    return _array_pairs(
+        _basket_sets(spark, sf_dir, max_basket), "parts", "pa", "pb"
+    )
 
 
 def _pairs_self_join(bp: DataFrame) -> DataFrame:
@@ -164,25 +170,6 @@ def _basket_sets(spark: SparkSession, sf_dir: str,
     return baskets
 
 
-def _pairs_from_sets(baskets: DataFrame) -> DataFrame:
-    """Expand each sorted part set to its C(b,2) ordered pairs inside a
-    higher-order function — one (pa, pb) row per (order, pair), pa < pb:
-    the exact multiset the basket self-join emits (pinned by test)."""
-    parts = F.col("parts")
-    pairs = F.flatten(
-        F.transform(
-            parts,
-            lambda x, i: F.transform(
-                F.slice(parts, i + F.lit(2), F.size(parts)),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
-    )
-    return baskets.select(F.explode(pairs).alias("e")).select(
-        F.col("e.pa").alias("pa"), F.col("e.pb").alias("pb")
-    )
-
-
 def _basket_pair_edges_sym(spark: SparkSession, sf_dir: str,
                            max_basket: int = BASKET_CAP) -> DataFrame:
     """BOTH orientations of every per-order co-purchase pair, duplicates
@@ -191,8 +178,8 @@ def _basket_pair_edges_sym(spark: SparkSession, sf_dir: str,
     edge DEDUP, the DEGREE computation and the adjacency-list build in
     ONE exchange, where the r13 kernels paid a distinct/groupBy(pa,pb)
     exchange plus a second per-vertex exchange (and PageRank/BFS scanned
-    the basket expansion once per union branch).  Both directions are
-    emitted INSIDE the same HOF pass (2 x C(b,2) structs per basket,
+    the basket expansion once per union branch).  Both directions come
+    out of ONE ``_array_pairs`` pass (i != j: 2 x C(b,2) rows per basket,
     bounded by the cap), so the upstream basket collapse is scanned
     exactly once.  Uncapped falls back to the reference self-join,
     symmetrized by union (the debug/eval convention)."""
@@ -201,25 +188,9 @@ def _basket_pair_edges_sym(spark: SparkSession, sf_dir: str,
         return half.unionAll(
             half.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
         )
-    parts = F.col("parts")
-    sym = F.flatten(
-        F.transform(
-            parts,
-            lambda x, i: F.flatten(
-                F.transform(
-                    F.slice(parts, i + F.lit(2), F.size(parts)),
-                    lambda y: F.array(
-                        F.struct(x.alias("pa"), y.alias("pb")),
-                        F.struct(y.alias("pa"), x.alias("pb")),
-                    ),
-                )
-            ),
-        )
-    )
-    return (
-        _basket_sets(spark, sf_dir, max_basket)
-        .select(F.explode(sym).alias("e"))
-        .select(F.col("e.pa").alias("pa"), F.col("e.pb").alias("pb"))
+    return _array_pairs(
+        _basket_sets(spark, sf_dir, max_basket), "parts", "pa", "pb",
+        symmetric=True,
     )
 
 
@@ -243,7 +214,7 @@ def part_cooccurrence_lift(spark: SparkSession, sf_dir: str,
     per-order part sets (cap = size filter — see `_basket_pair_edges`);
     the persisted set frame then serves all three consumers row-locally —
     n_orders is a plain count of its rows (one per order), the marginals
-    explode it, and the pair counts expand it via the C(b,2) HOF — so
+    explode it, and the pair counts expand it via ``_array_pairs`` — so
     the old distinct shuffle + window cap + self-join chain is gone.
     Two broadcast joins attach the (part-count-sized) marginals.  lift
     is computed as one integer product then a single division — no
@@ -263,12 +234,10 @@ def part_cooccurrence_lift(spark: SparkSession, sf_dir: str,
         .agg(F.count(F.lit(1)).alias("c"))
     )
     if max_basket:
-        raw_pairs = _pairs_from_sets(b)
+        raw_pairs = _array_pairs(b, "parts", "pa", "pb")
     else:
-        # uncapped debug/eval path: the HOF expansion would build a hub
-        # order's C(b,2) structs in ONE row (see _basket_pair_edges) —
-        # self-join the exploded rows instead, still off the persisted
-        # set frame
+        # uncapped debug/eval path: the distributed reference self-join
+        # (see _basket_pair_edges), still off the persisted set frame
         raw_pairs = _pairs_self_join(
             b.select("l_orderkey", F.explode("parts").alias("l_partkey"))
         )
@@ -871,16 +840,21 @@ def bfs_hops(spark: SparkSession, sf_dir: str,
     far is every part from the best-connected hub" is the reachability
     question behind related-item exploration depth and graph QA.
 
-    Source = the globally minimum part id (deterministic, no parameter).
-    The loop is frontier expansion with a visited set: per hop one edge
-    join (frontier-keyed) + one anti-join against visited + a distinct —
-    each O(|frontier edges|), never the whole graph re-traversed.  The
-    frontier is re-persisted and lineage-cut per hop (localCheckpoint,
-    the connected_components discipline); the loop stops early on an
-    empty frontier (scalar count — the only driver action) or at
-    ``max_hops`` (bounded so the recursive-CTE oracle can mirror it;
-    nodes beyond max_hops are reported unreachable-within-bound by
-    omission, exactly like the oracle).
+    Source = the globally minimum part id (deterministic, no parameter),
+    read off an Observation on the action that materializes the persisted
+    adjacency, so it costs no job of its own.  Hop 1 is the source's own
+    adjacency rows (a filter, no join, no distinct).  Every later hop is
+    one edge join (frontier-keyed) + a distinct + one anti-join against
+    the previous TWO layers only: the adjacency is symmetric, so a
+    neighbor of layer k lies in layer k-1, k or k+1, and older layers
+    can never reappear.  Each of those layers is lineage-cut by an eager
+    localCheckpoint whose row count rides along as an Observation (the
+    connected_components discipline), so a build costs one adjacency
+    materialization plus about four jobs per hop.  The loop stops early
+    on an empty layer or at ``max_hops`` (bounded so the recursive-CTE
+    oracle can mirror it; nodes beyond max_hops are reported
+    unreachable-within-bound by omission, exactly like the oracle).  An
+    edge-less graph yields the oracle's base row ``(NULL, 0)``.
 
     The loop-INVARIANT big side of every hop's join is persisted as a
     chunked ADJACENCY list, not a flat edge list (r13 second pass): the
@@ -907,41 +881,42 @@ def bfs_hops(spark: SparkSession, sf_dir: str,
         .agg(F.sort_array(F.collect_set("pb")).alias("nbrs"))
         .select("src", F.explode(_chunk_array("nbrs")).alias("nbrs"))
     )
-    source = adj.agg(F.min("src").alias("node")).select(
-        "node", F.lit(0).cast("int").alias("hops")
+    obs = Observation()
+    adj.observe(obs, F.min("src").alias("s")).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    src = obs.get["s"]
+    source = spark.range(1).select(
+        F.lit(src).cast(adj.schema["src"].dataType).alias("node"),
+        F.lit(0).cast("int").alias("hops"),
     )
-    visited = source.localCheckpoint(eager=True)
-    frontier = visited
-    from pyspark.sql import Observation
-
-    for hop in range(1, max_hops + 1):
-        # the empty-frontier probe rides the checkpoint action as an
-        # Observation metric — one driver job per hop instead of two
-        # (r13 optimization, same as connected_components)
+    if src is None or max_hops < 1:
+        return source
+    # hop 1 (never empty) stays lazy: a point lookup in the cached
+    # adjacency, whose per-batch src statistics prune the scan, is cheaper
+    # to repeat than a checkpoint job
+    layers = [source, adj.filter(F.col("src") == F.lit(src)).select(
+        F.explode("nbrs").alias("node"), F.lit(1).cast("int").alias("hops")
+    )]
+    for hop in range(2, max_hops + 1):
         obs = Observation()
-        nxt = (
-            adj.join(
-                frontier.select(F.col("node").alias("src")), "src"
-            )
+        layer = (
+            adj.join(layers[-1].select(F.col("node").alias("src")), "src")
             .select(F.explode("nbrs").alias("node"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
+            .join(
+                layers[-2].unionByName(layers[-1]).select("node"),
+                "node",
+                "left_anti",
+            )
             .select("node", F.lit(hop).cast("int").alias("hops"))
             .observe(obs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
         if int(obs.get["n"]) == 0:
             break
-        # plain union, NOT re-checkpointed: every hop's frontier is
-        # already an eagerly-materialized localCheckpoint, so the visited
-        # set is a union of at most max_hops materialized RDDs — shallow
-        # lineage, no recompute.  Re-checkpointing the union (the r7-r12
-        # shape) re-materialized the ENTIRE visited set once per hop:
-        # Θ(|V| x hops) extra row writes that the anti-join never needed
-        # (r13 optimization; guide §5 localCheckpoint note).
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited
+        layers.append(layer)
+    return reduce(DataFrame.unionByName, layers)
 
 
 _oracle(

@@ -1242,6 +1242,10 @@ def winnowing_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole chain DuckDB-mirrorable.
     """
     from airflow_postgres_to_s3_pipeline_spark.cache import tracked_persist
+    # function-local: dedup imports this module's SQL constants
+    from airflow_postgres_to_s3_pipeline_spark.operators.dedup import (
+        _array_pairs,
+    )
 
     d = table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
@@ -1258,32 +1262,20 @@ def winnowing_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guide §2.4): ONE collect_list exchange on fp builds each posting
     # list, the df cap becomes a plain size filter (replacing the
     # separate cap aggregate + two kept-joins + posting self-join of the
-    # r9-r12 shape), and the C(b,2) expansion is row-local inside a HOF
-    # bounded by the cap.  ``sel`` is array_distinct'ed per doc, so
-    # doc_ids are unique within a posting and the sorted i<j expansion
-    # equals the join's id_a < id_b pair multiset (parity pinned by the
-    # oracle and by test).  Measured at sf0.1 (same-session A/B,
-    # min-of-3, persisted inputs): 1.44s -> 0.67s for the pair stage.
-    # The posting frame is consumed once now, so its persist is gone too.
+    # r9-r12 shape), and the C(b,2) expansion is the shared pair kernel
+    # (dedup._array_pairs), bounded by the cap.  ``sel`` is
+    # array_distinct'ed per doc, so doc_ids are unique within a posting
+    # and the sorted i<j expansion equals the join's id_a < id_b pair
+    # multiset (parity pinned by the oracle and by test).  Measured at
+    # sf0.1 (same-session A/B, min-of-3, persisted inputs): 1.44s ->
+    # 0.67s for the pair stage.  The posting frame is consumed once now,
+    # so its persist is gone too.
     buckets = post.groupBy("fp").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
-    )
-    ids = F.col("ids")
-    pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
+    ).filter(F.size("ids") <= WINNOW_DF_CAP)
     return (
-        buckets.filter(
-            (F.size("ids") >= 2) & (F.size("ids") <= WINNOW_DF_CAP)
-        )
-        .select(F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        _array_pairs(buckets, "ids", "id_a", "id_b")
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared_fps"))
         .filter(F.col("shared_fps") >= WINNOW_PAIR_MIN)
     )

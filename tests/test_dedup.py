@@ -690,3 +690,67 @@ def test_simhash_grouped_cand_matches_selfjoin(spark, sf_dir):
     }
     assert grouped == selfjoin
     assert grouped
+
+
+def test_array_pairs_pairs_by_position(spark):
+    """The shared pair kernel pairs array elements BY POSITION: i < j
+    (itertools.combinations) or, symmetric, i != j (permutations).  A
+    repeated element — collect_list buckets can hold repeats — pairs with
+    its own copy, and a struct payload (the simhash (doc_id, simhash)
+    members) travels through whole."""
+    from itertools import combinations, permutations
+
+    rows = [(1, [3, 1, 3, 2]), (2, [7]), (3, [])]
+    df = spark.createDataFrame(rows, "k long, xs array<long>")
+    for symmetric, pick in ((False, combinations), (True, permutations)):
+        got = sorted(
+            tuple(r)
+            for r in dedup._array_pairs(
+                df, "xs", "a", "b", ("k",), symmetric=symmetric
+            ).collect()
+        )
+        assert got == sorted(
+            (k, a, b) for k, xs in rows for a, b in pick(xs, 2)
+        ), f"symmetric={symmetric}"
+
+    ms = [(5, 50), (5, 50), (9, 90)]
+    sdf = spark.createDataFrame(
+        [(ms,)], "ms array<struct<doc_id:long,simhash:long>>"
+    )
+    got = sorted(
+        (r.a.doc_id, r.b.doc_id, r.a.simhash, r.b.simhash)
+        for r in dedup._array_pairs(sdf, "ms", "a", "b").collect()
+    )
+    assert got == sorted(
+        (a[0], b[0], a[1], b[1]) for a, b in combinations(ms, 2)
+    )
+
+    banded = spark.createDataFrame(
+        [(0, 11, 5), (0, 11, 5), (0, 11, 6), (1, 22, 5)],
+        "band int, band_hash long, doc_id long",
+    )
+    got = sorted(
+        tuple(r)
+        for r in dedup._bucket_pair_expansion(
+            banded, ("band", "band_hash"), 10
+        ).collect()
+    )
+    assert got == [(5, 5), (5, 6)]
+
+
+def test_ngram_grouped_matches_selfjoin(spark, sf_dir):
+    """Posting-site parity: the capped bucket-collapse path (pair kernel
+    over each (lang, shingle) posting) and the uncapped self-join fallback
+    must agree pair-for-pair, jaccard included, when the cap does not
+    bind."""
+    grouped = {
+        tuple(r) for r in dedup.ngram_jaccard_pairs(spark, sf_dir).collect()
+    }
+    selfjoin = {
+        tuple(r)
+        for r in dedup.ngram_jaccard_pairs(
+            spark, sf_dir, max_posting=0
+        ).collect()
+    }
+    assert grouped == selfjoin
+    assert grouped

@@ -4,8 +4,10 @@ teleport floor, determinism under repartitioning)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from airflow_postgres_to_s3_pipeline_spark.cache import release_persisted
 from airflow_postgres_to_s3_pipeline_spark.operators import graph
 
 
@@ -334,14 +336,16 @@ def test_basket_sql_zero_cap_means_disabled():
 
 
 def test_basket_pair_edges_matches_self_join_reference(spark, tmp_path):
-    """The row-local HOF pair expansion (r10 verdict task 3: one
-    collect_set exchange, cap as a size filter) must emit the EXACT
-    multiset of the capped basket self-join it replaced — per-order
-    C(b,2) pairs with pa < pb, over-cap orders excluded — on a corpus
-    with duplicate lineitem rows (distinct semantics), a hub order, and
-    multi-order pairs (multiset multiplicity)."""
+    """The posexplode pair kernel (one collect_set exchange, cap as a
+    size filter) must emit the EXACT multiset of the capped basket
+    self-join it replaced — per-order C(b,2) pairs with pa < pb, over-cap
+    orders excluded — on a corpus with a duplicated hub order and
+    multi-order pairs (multiset multiplicity).  The symmetric feed
+    (i != j) must be that multiset plus its mirror, which at cap=0 is the
+    uncapped union fallback itself; at the default (non-binding) cap the
+    kernel runs over the hub orders too."""
     d = _hub_basket_dir(spark, tmp_path)
-    for cap in (0, 10):
+    for cap in (0, 10, graph.BASKET_CAP):
         got = sorted(
             (r.pa, r.pb)
             for r in graph._basket_pair_edges(
@@ -365,3 +369,114 @@ def test_basket_pair_edges_matches_self_join_reference(spark, tmp_path):
         )
         assert got == want, f"cap={cap}"
         assert len(got) > 0
+        sym = sorted(
+            (r.pa, r.pb)
+            for r in graph._basket_pair_edges_sym(
+                spark, d, max_basket=cap
+            ).collect()
+        )
+        assert sym == sorted(want + [(pb, pa) for pa, pb in want]), (
+            f"sym cap={cap}"
+        )
+
+
+def _lineitem_dir(spark, tmp_path, name, baskets):
+    """Write one order per basket (a list of part ids) as the lineitem
+    table of a fresh dir; returns the dir."""
+    rows = [(o, p) for o, parts in enumerate(baskets) for p in parts]
+    d = str(tmp_path / name)
+    spark.createDataFrame(
+        rows, "l_orderkey long, l_partkey long"
+    ).write.parquet(f"{d}/lineitem.parquet")
+    return d
+
+
+def _bfs_oracle_rows(d):
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{d}/lineitem.parquet/*.parquet')"
+    )
+    return con.sql(graph.ORACLES["bfs_hops"]).fetchall()
+
+
+@pytest.mark.parametrize(
+    "name,edges",
+    [
+        # same-layer edges: the far ends 3-4 of the 7-cycle meet inside
+        # layer 3, and the chord 2-5 joins two layer-2 nodes
+        ("odd_cycle", [(i, (i + 1) % 7) for i in range(7)]
+         + [(2, 5), (2, 9), (9, 10)]),
+        # a hub two hops from the source whose spokes are also joined
+        # among themselves, one spoke leading on past the hub
+        ("hub", [(0, 1), (1, 2)] + [(2, s) for s in range(10, 40)]
+         + [(s, s + 1) for s in range(10, 39, 2)] + [(39, 50), (50, 51)]),
+        # a path longer than BFS_MAX_HOPS: the tail is cut by the bound
+        ("long_path", [(i, i + 1) for i in range(graph.BFS_MAX_HOPS + 4)]),
+    ],
+)
+def test_bfs_hops_two_layer_anti_join_matches_oracle(spark, tmp_path,
+                                                    name, edges):
+    """Each hop excludes only the previous two layers (valid because the
+    adjacency is symmetric); on graphs with same-layer edges, a hub, and
+    reachable nodes beyond the hop bound, the result must equal the
+    recursive-CTE oracle run on DuckDB."""
+    d = _lineitem_dir(spark, tmp_path, name, [list(e) for e in edges])
+    got = sorted(tuple(r) for r in graph.bfs_hops(spark, d).collect())
+    release_persisted()
+    assert got == sorted(_bfs_oracle_rows(d))
+    assert max(h for _, h in got) >= 3  # deep enough to use both layers
+
+
+def test_bfs_hops_edgeless_graph_returns_oracle_base_row(spark, tmp_path):
+    """No order holds two distinct parts, so there are no edges: the
+    result is the oracle's ``SELECT MIN(src), 0`` base row, (NULL, 0)."""
+    d = _lineitem_dir(spark, tmp_path, "edgeless", [[1], [2, 2], [3]])
+    got = [tuple(r) for r in graph.bfs_hops(spark, d).collect()]
+    release_persisted()
+    assert got == [(None, 0)]
+    assert got == _bfs_oracle_rows(d)
+
+
+def test_bfs_hops_zero_hops_returns_source_only(spark, sf_dir):
+    """max_hops=0 returns the source (the minimum part with an edge) at
+    hop 0 and nothing else."""
+    got = [tuple(r) for r in graph.bfs_hops(spark, sf_dir, max_hops=0)
+           .collect()]
+    src = (
+        graph._basket_pair_edges(spark, sf_dir)
+        .agg(F.min("pa").alias("s"))
+        .first()["s"]
+    )
+    release_persisted()
+    assert got == [(src, 0)]
+
+
+def test_bfs_hops_build_job_budget(spark, sf_dir):
+    """Build-layer guard: building bfs_hops' result (the eager loop, not
+    the final action) runs at most 13 Spark jobs on this fixture — the
+    adjacency materialization, which also yields the source, then about
+    four per later hop (join, exchange, anti-join side, checkpoint); the
+    lazy hop-1 lookup costs none.  Stages map to jobs differently without
+    AQE, so the guard is AQE-only."""
+    import os
+
+    if os.environ.get("SPARK_GRAFT_AQE") == "0":
+        pytest.skip("job count is calibrated for adaptive execution")
+    from airflow_postgres_to_s3_pipeline_spark.catalog import table
+
+    table(spark, sf_dir, "lineitem")  # the catalog's one-time schema read
+    sc = spark.sparkContext
+    group = "bfs_hops_build_budget"
+    sc.setJobGroup(group, "bfs_hops build")
+    try:
+        graph.bfs_hops(spark, sf_dir)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        release_persisted()
+    assert 0 < len(jobs) <= 13, f"{len(jobs)} build jobs"
