@@ -29,9 +29,11 @@ Policy:
 from __future__ import annotations
 
 import os
+from typing import Any
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 # Strong references: the producing function's locals die when it returns
 # (the lazy result only references them through the JVM plan), so the
@@ -61,6 +63,25 @@ def tracked_persist(df: DataFrame, corpus: bool = False) -> DataFrame:
     df.persist(level)
     _TRACKED.append(df)
     return df
+
+
+def checkpoint(df: DataFrame, metric: Column | None = None) -> tuple[DataFrame, Any]:
+    """Materialize one round of an iterative loop: returns ``df`` cut by an
+    eager ``localCheckpoint`` together with the scalar ``metric`` (an
+    aggregate Column; default: the row count) observed on that same action.
+
+    The cut keeps a loop's plan one round deep instead of doubling per
+    round, and the convergence or empty-round probe rides the checkpoint
+    job as an Observation, so a round costs one driver action, not two.
+    The blocks are local: they live on the executors that computed them
+    and die with them.  On a cluster that loses executors, a reliable
+    ``checkpoint()`` to ``spark.sparkContext.setCheckpointDir`` storage is
+    the drop-in replacement.
+    """
+    obs = Observation()
+    metric = F.count(F.lit(1)) if metric is None else metric
+    cut = df.observe(obs, metric.alias("v")).localCheckpoint(eager=True)
+    return cut, obs.get["v"]
 
 
 def release_persisted() -> int:

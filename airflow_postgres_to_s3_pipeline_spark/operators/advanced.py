@@ -26,9 +26,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from airflow_postgres_to_s3_pipeline_spark.cache import checkpoint, tracked_persist
 from airflow_postgres_to_s3_pipeline_spark.catalog import table
 from airflow_postgres_to_s3_pipeline_spark.functions.numeric import dsum
 from airflow_postgres_to_s3_pipeline_spark.operators.skew import (
@@ -2056,18 +2059,16 @@ def frontier_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     Execution shape: lineitem is projected to 3 columns, hash-partitioned
     on l_orderkey once, and persisted; every hop's join then reuses that
     partitioning (frontier side shuffles, fact side does not).  The only
-    per-hop driver actions are the eager localCheckpoint (lineage cut, as
-    in graph.bfs_hops) and an isEmpty early-exit probe; depth is bounded
-    up front by one scalar MAX(l_linenumber) aggregate (~7 in TPC-H
-    shape).  The running sum accumulates in linenumber order — the exact
-    ((q1+q2)+q3) fold the recursion defines — so doubles are
-    bit-identical to both the SQL tier and the DuckDB oracle.
+    per-hop driver action is ``cache.checkpoint`` (lineage cut, as in
+    graph.bfs_hops), whose observed row count stops the walk at the first
+    empty step — depth is max lines per order (~7 in TPC-H shape) plus
+    that one empty step.  The running sum accumulates in linenumber
+    order — the exact ((q1+q2)+q3) fold the recursion defines — so
+    doubles are bit-identical to both the SQL tier and the DuckDB oracle.
 
     Tier equivalence (byte-for-byte vs recursive_order_chain) is pinned
     by tests/test_advanced.py.
     """
-    from airflow_postgres_to_s3_pipeline_spark.cache import tracked_persist
-
     li = tracked_persist(
         table(spark, sf_dir, "lineitem")
         .select(
@@ -2077,23 +2078,13 @@ def frontier_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .repartition("l_orderkey")
     )
-    max_ln_row = li.agg(F.max("ln").alias("m")).first()
-    max_ln = int(max_ln_row["m"] or 0)
-
-    frontier = (
+    frontier, _ = checkpoint(
         li.filter(F.col("ln") == 1)
         .select("l_orderkey", "ln", F.col("qty").alias("running_qty"))
-        .localCheckpoint(eager=True)
     )
-    from pyspark.sql import Observation
-
     acc = frontier
-    for step in range(2, max_ln + 1):
-        # the empty-frontier probe rides the checkpoint action as an
-        # Observation metric — one driver job per step instead of two
-        # (r13 optimization, same as connected_components / bfs_hops)
-        obs = Observation()
-        nxt = (
+    for step in itertools.count(2):
+        nxt, n = checkpoint(
             li.filter(F.col("ln") == step)
             .join(
                 frontier.select(
@@ -2106,10 +2097,8 @@ def frontier_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ln",
                 (F.col("_prev") + F.col("qty")).alias("running_qty"),
             )
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
-        if int(obs.get["n"]) == 0:
+        if n == 0:
             break
         acc = acc.unionByName(nxt)
         frontier = nxt

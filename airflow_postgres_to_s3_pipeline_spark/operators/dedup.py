@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from airflow_postgres_to_s3_pipeline_spark.cache import tracked_persist
+from airflow_postgres_to_s3_pipeline_spark.cache import checkpoint, tracked_persist
 from airflow_postgres_to_s3_pipeline_spark.catalog import table
 
 ORACLES: dict[str, str] = {}
@@ -880,26 +880,19 @@ _oracle("dedup_incremental_minhash", _dedup_incremental_minhash_oracle())
 # ---------------------------------------------------------------------------
 
 def connected_components(pairs: DataFrame, node_ids: DataFrame,
-                         max_iterations: int = 6,
-                         on_unconverged: str = "raise",
                          include_singletons: bool = True) -> DataFrame:
     """Cluster ids via min-label propagation over an undirected pair graph.
 
-    Each iteration joins every node's current label with its neighbors' and
-    keeps the minimum — after d propagation steps every node holds the
-    minimum id within distance d.  The initial labels are pre-seeded at
-    depth 1 (min of self and direct neighbors, computed on the edge
-    build's own exchange), so components of diameter <=
-    max_iterations + 1 converge (near-dup clusters are shallow; 6 hops
-    covers them).  Per iteration: one shuffle join on node id + one
-    groupBy min.  Labels stay DataFrames — no driver materialization,
-    the loop shape runs unchanged at 100 TB.
-
-    If labels are still changing after ``max_iterations`` (a component with
-    diameter > max_iterations, e.g. a long duplicate chain), the result
-    would silently under-merge — ``on_unconverged`` controls the reaction:
-    ``"raise"`` (default) raises RuntimeError, ``"warn"`` emits a warning
-    and returns the partial labels, ``"ignore"`` returns them silently.
+    Each round joins every node's current label with its neighbors' and
+    keeps the minimum — after d rounds every node holds the minimum id
+    within distance d.  The initial labels are pre-seeded at depth 1 (min
+    of self and direct neighbors, computed on the edge build's own
+    exchange).  Labels only ever decrease, so the loop runs to its fixed
+    point: it stops after the first round that changes no label, a
+    component of diameter d converging in about d rounds with no budget to
+    exceed.  Per round: one shuffle join on node id + one groupBy min.
+    Labels stay DataFrames — no driver materialization, the loop shape
+    runs unchanged at 100 TB.
 
     pairs: (doc_a, doc_b) edges; node_ids: (doc_id) universe.  Returns
     (doc_id, cluster_id) where cluster_id is the component's min doc_id.
@@ -913,8 +906,6 @@ def connected_components(pairs: DataFrame, node_ids: DataFrame,
     at LLM-dedup scale the duplicated population is orders of magnitude
     smaller than the corpus.  ``node_ids`` is ignored in that mode.
     """
-    if on_unconverged not in ("raise", "warn", "ignore"):
-        raise ValueError(f"on_unconverged must be raise/warn/ignore, got {on_unconverged!r}")
     # The edge list feeds every iteration — persist it so the (possibly
     # expensive) pair-generation pipeline upstream runs exactly once, and
     # hash-partition it on ``dst`` (each iteration's join key) so every
@@ -944,22 +935,21 @@ def connected_components(pairs: DataFrame, node_ids: DataFrame,
     # ``dst`` carries every endpoint because edges are symmetric), so
     # shallow clusters (the common near-dup case) converge one full
     # join+aggregate+checkpoint round earlier (r13, second pass).
-    # Eagerly checkpointed (a thin id frame) because the returned plan
-    # still references it AFTER the loop unpersists ``edges`` — without
-    # the cut, materializing the result would re-run the whole upstream
+    # Checkpointed (a thin id frame) because the returned plan still
+    # references it AFTER the loop unpersists ``edges`` — without the
+    # cut, materializing the result would re-run the whole upstream
     # pair-generation pipeline.
-    labels = (
+    labels, _ = checkpoint(
         edges.groupBy(F.col("dst").alias("doc_id"))
         .agg(F.min("src").alias("_nbr_min"))
         .select(
             "doc_id",
             F.least(F.col("doc_id"), F.col("_nbr_min")).alias("cluster_id"),
         )
-        .localCheckpoint(eager=True)
     )
     edge_nodes = labels.select("doc_id")
-    changed = 0
-    for _ in range(max_iterations):
+    changed = 1
+    while changed:
         neighbor_min = (
             edges.join(labels, edges.dst == labels.doc_id)
             .groupBy("src")
@@ -975,41 +965,11 @@ def connected_components(pairs: DataFrame, node_ids: DataFrame,
                 (F.col("nbr_min") < F.col("cluster_id")).alias("_changed"),
             )
         )
-        # Materialize and cut lineage each round — without this the plan
-        # doubles per iteration and the optimizer, not the data, becomes the
-        # bottleneck.  (On a cluster use checkpoint() to reliable storage.)
-        # The convergence probe rides the SAME action as an Observation
-        # metric filled while the checkpoint materializes — one driver job
-        # per iteration instead of two (r13 optimization; the separate
-        # filter+count scan of the checkpointed frame is gone).  NULL
-        # ``_changed`` rows (no neighbor) are skipped by SUM exactly as the
-        # old filter skipped them.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        updated = updated.observe(
-            obs,
-            F.coalesce(
-                F.sum(F.col("_changed").cast("int")), F.lit(0)
-            ).alias("n_changed"),
-        ).localCheckpoint(eager=True)
-        changed = int(obs.get["n_changed"])
+        # each round is cut and counts its changed labels on the same job;
+        # NULL ``_changed`` rows (no neighbor) are not counted
+        updated, changed = checkpoint(updated, F.count_if("_changed"))
         labels = updated.drop("_changed")
-        if changed == 0:
-            break
     edges.unpersist()
-    if changed != 0:
-        msg = (
-            f"connected_components did not converge in {max_iterations} "
-            "iterations: a component's diameter exceeds the budget and its "
-            "labels are still propagating (clusters would under-merge)"
-        )
-        if on_unconverged == "raise":
-            raise RuntimeError(msg)
-        if on_unconverged == "warn":
-            import warnings
-
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
     if not include_singletons:
         return labels
     singletons = node_ids.join(edge_nodes, "doc_id", "left_anti").select(
@@ -1033,17 +993,12 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_pairs(
         d, shards=spark.sparkContext.defaultParallelism, checkable=True
     ).select("doc_a", "doc_b")
-    # max_iterations=10 gives headroom over the default 6 (each iteration
-    # past convergence is skipped via the changed==0 break, so the extra
-    # budget costs nothing on shallow cluster graphs); an adversarial
-    # longer-than-10 chain raises instead of silently under-merging.
     # include_singletons=False: the final filter keeps only size>1
     # clusters, whose members are all edge nodes — the corpus-sized
     # singleton anti-join/union and their trip through this aggregate are
     # pure waste (r14; the oracle already computes the closure edge-only).
     labels = connected_components(
-        pairs, d.select("doc_id"), max_iterations=10,
-        include_singletons=False,
+        pairs, d.select("doc_id"), include_singletons=False
     )
     return (
         labels.groupBy("cluster_id")
@@ -1114,8 +1069,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # makes singleton clusters unreachable, so the quality join and both
     # cluster aggregates run over |edge nodes| rows, not |corpus| (r14)
     labels = connected_components(
-        pairs, d.select("doc_id"), max_iterations=10,
-        include_singletons=False,
+        pairs, d.select("doc_id"), include_singletons=False
     )
     quality = doc_quality(spark, sf_dir).select("doc_id", "quality_score")
     member = tracked_persist(labels.join(quality, "doc_id"))

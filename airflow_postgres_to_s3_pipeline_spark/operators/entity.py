@@ -353,10 +353,9 @@ def fuzzy_canonicalize_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster elects the spelling carried by the most records (ties broken
     lexicographically) as canonical — the survivorship step of an ER
     pipeline.  The test vocabulary's adjective family forms a diameter-3
-    chain per noun (cold—old—red—new under edit distance <= 2), so three
-    hops of min-label propagation reach the fixed point; the general
-    any-diameter convergence loop is dedup.connected_components, which this
-    reuses semantically.
+    chain per noun (cold—old—red—new under edit distance <= 2); the
+    clustering is dedup.connected_components, which propagates labels to
+    their fixed point at any diameter.
 
     Returns (name, canonical_name, cluster_records) for every name in a
     non-singleton cluster.
@@ -373,18 +372,14 @@ def fuzzy_canonicalize_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         fuzzy_match_parts(spark, sf_dir, names=names).select("name_a", "name_b")
     )
 
-    # transitive clusters via the convergence-checked operator (raises on
-    # a component deeper than its iteration budget instead of silently
-    # under-merging — the test vocabulary's adjective chain is diameter 3,
-    # cold—old—red—new, and a fixed-round inline loop would rot if the
-    # vocabulary grew)
+    # transitive clusters, run to the fixed point — a fixed-round inline
+    # loop would under-merge once the vocabulary's edit chains grew deeper
     labels = (
         connected_components(
             pairs.select(
                 F.col("name_a").alias("doc_a"), F.col("name_b").alias("doc_b")
             ),
             names.select(F.col("name").alias("doc_id")),
-            max_iterations=8,
         )
         .select(
             F.col("doc_id").alias("name"), F.col("cluster_id").alias("label")
@@ -466,9 +461,9 @@ _oracle(
         SELECT name_b, name_a FROM pairs
     ),
     -- FULL transitive closure (any component diameter), mirroring the
-    -- convergence-checked connected_components the Spark side runs — a
-    -- fixed-hop unrolling here would rot if the vocabulary's edit chains
-    -- ever grew deeper
+    -- fixed-point connected_components the Spark side runs — a fixed-hop
+    -- unrolling here would rot if the vocabulary's edit chains ever grew
+    -- deeper
     closure AS (
         SELECT name_a, name_b FROM edges
         UNION

@@ -14,8 +14,8 @@ Scale notes (100 TB):
 - Each PageRank iteration is one (edge join + dst-keyed aggregate): two
   shuffles per iteration on a frame of |V| + |E| rows, the textbook
   distributed formulation.  Iterations are a fixed small count here; a
-  production loop adds convergence checks + localCheckpoint lineage cuts
-  exactly as dedup.connected_components does.
+  convergence-checked loop cuts each round with ``cache.checkpoint`` as
+  dedup.connected_components does.
 - Determinism: ranks live as integer MICRO-units (1e9 scale) and every
   per-edge contribution is integer floor-division — there is no float
   anywhere in the iteration, so any partitioning, any engine, any
@@ -30,7 +30,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from airflow_postgres_to_s3_pipeline_spark.cache import tracked_persist
+from airflow_postgres_to_s3_pipeline_spark.cache import checkpoint, tracked_persist
 from airflow_postgres_to_s3_pipeline_spark.catalog import table
 from airflow_postgres_to_s3_pipeline_spark.operators.dedup import (
     _array_pairs,
@@ -357,9 +357,9 @@ def pagerank_parts(spark: SparkSession, sf_dir: str,
 
     Per iteration: one edge join (src-keyed) + one dst-keyed aggregate —
     the standard distributed PageRank step.  The fixed iteration count
-    keeps the entry SQL-expressible; the convergence-checked production
-    variant follows dedup.connected_components (scalar convergence
-    action + localCheckpoint lineage cuts).
+    keeps the entry SQL-expressible; a convergence-checked variant would
+    cut each round with ``cache.checkpoint`` and stop on its observed
+    scalar, as dedup.connected_components does.
     """
     # The degree-annotated ADJACENCY list is iteration-INVARIANT — build
     # it in ONE pass (one hash(src) exchange: the groupBy) and persist
@@ -847,9 +847,9 @@ def bfs_hops(spark: SparkSession, sf_dir: str,
     one edge join (frontier-keyed) + a distinct + one anti-join against
     the previous TWO layers only: the adjacency is symmetric, so a
     neighbor of layer k lies in layer k-1, k or k+1, and older layers
-    can never reappear.  Each of those layers is lineage-cut by an eager
-    localCheckpoint whose row count rides along as an Observation (the
-    connected_components discipline), so a build costs one adjacency
+    can never reappear.  Each of those layers is cut by
+    ``cache.checkpoint``, whose observed row count detects the empty
+    layer on the same job, so a build costs one adjacency
     materialization plus about four jobs per hop.  The loop stops early
     on an empty layer or at ``max_hops`` (bounded so the recursive-CTE
     oracle can mirror it; nodes beyond max_hops are reported
@@ -899,8 +899,7 @@ def bfs_hops(spark: SparkSession, sf_dir: str,
         F.explode("nbrs").alias("node"), F.lit(1).cast("int").alias("hops")
     )]
     for hop in range(2, max_hops + 1):
-        obs = Observation()
-        layer = (
+        layer, n = checkpoint(
             adj.join(layers[-1].select(F.col("node").alias("src")), "src")
             .select(F.explode("nbrs").alias("node"))
             .distinct()
@@ -910,10 +909,8 @@ def bfs_hops(spark: SparkSession, sf_dir: str,
                 "left_anti",
             )
             .select("node", F.lit(hop).cast("int").alias("hops"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
-        if int(obs.get["n"]) == 0:
+        if n == 0:
             break
         layers.append(layer)
     return reduce(DataFrame.unionByName, layers)

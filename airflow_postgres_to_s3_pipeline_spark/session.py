@@ -42,15 +42,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's default tuning.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default 32); on a real
-    cluster ``master`` comes from spark-submit and this arg is ignored.
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: this host's
+    CPU count); on a real cluster ``master`` comes from spark-submit and
+    this arg is ignored.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    host_cpus = os.cpu_count() or 1
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus))
     master = master or f"local[{cpus}]"
     try:
         default_parallelism = max(int(cpus), 4)
     except ValueError:
-        default_parallelism = 32
+        default_parallelism = max(host_cpus, 4)
     sp = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", default_parallelism)
     )

@@ -354,6 +354,47 @@ def test_frontier_order_chain_matches_recursive_tier(spark, sf_dir):
         assert repr(ra["total_qty"]) == repr(rb["total_qty"])
 
 
+def _chain_tiers_on(spark, sf_dir, tmp_path, rows):
+    """Both chain tiers over a tiny ``lineitem`` written to ``tmp_path``
+    (the other tables are links to ``sf_dir``: the SQL tier registers
+    every view).  A new session keeps those views out of the shared one."""
+    import os
+
+    from airflow_postgres_to_s3_pipeline_spark.catalog import TABLES
+
+    for name in TABLES:
+        if name != "lineitem":
+            os.symlink(f"{sf_dir}/{name}.parquet", tmp_path / f"{name}.parquet")
+    spark.createDataFrame(
+        rows, "l_orderkey long, l_linenumber int, l_quantity double"
+    ).write.parquet(str(tmp_path / "lineitem.parquet"))
+    session = spark.newSession()
+    return [
+        sorted(tuple(r) for r in tier(session, str(tmp_path)).collect())
+        for tier in (advanced.recursive_order_chain, advanced.frontier_order_chain)
+    ]
+
+
+def test_frontier_order_chain_empty_lineitem(spark, sf_dir, tmp_path):
+    """No lineitem rows: the walk stops on its first (empty) step and both
+    tiers return no chains."""
+    rec, fro = _chain_tiers_on(spark, sf_dir, tmp_path, [])
+    assert rec == fro == []
+
+
+def test_frontier_order_chain_stops_at_linenumber_gap(spark, sf_dir, tmp_path):
+    """An order whose line numbers skip one (1, 2, 4) chains only up to
+    the gap, while a longer gap-free order keeps the walk going past it;
+    an order with no line 1 has no chain.  Both tiers agree."""
+    rows = [
+        (1, 1, 1.0), (1, 2, 2.0), (1, 4, 4.0),
+        (2, 1, 10.0), (2, 2, 20.0), (2, 3, 30.0), (2, 4, 40.0),
+        (3, 2, 5.0),
+    ]
+    rec, fro = _chain_tiers_on(spark, sf_dir, tmp_path, rows)
+    assert rec == fro == [(1, 2, 3.0), (2, 4, 100.0)]
+
+
 def test_recursive_entries_do_not_mutate_session_conf(spark, sf_dir):
     """r12 ADVICE: the WITH RECURSIVE operators must not set session conf
     themselves — the raised cteRecursionRowLimit comes from the session

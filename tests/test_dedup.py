@@ -131,36 +131,21 @@ def test_dedup_exact_collapses_copies(spark, sf_dir):
     assert agg == total_docs
 
 
-def test_connected_components_unconverged_raises(spark):
-    """A chain longer than the iteration budget must NOT silently
-    under-merge: default behavior raises, warn-mode returns partial labels
-    with a RuntimeWarning."""
+def test_connected_components_runs_to_fixed_point(spark):
+    """A 20-node path graph (diameter 19, deeper than any old iteration
+    budget) converges: every node lands in one cluster labeled by the min
+    doc_id, with no RuntimeWarning."""
     import warnings
 
-    import pytest
-
-    chain = [(i, i + 1) for i in range(12)]  # diameter 12 path graph
+    chain = [(i, i + 1) for i in range(19)]
     pairs = spark.createDataFrame(chain, ["doc_a", "doc_b"])
-    nodes = spark.createDataFrame([(i,) for i in range(13)], ["doc_id"])
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs, nodes, max_iterations=2)
+    nodes = spark.createDataFrame([(i,) for i in range(20)], ["doc_id"])
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        labels = dedup.connected_components(
-            pairs, nodes, max_iterations=2, on_unconverged="warn"
-        )
-        labels.collect()
-    assert any("did not converge" in str(w.message) for w in caught)
-
-
-def test_connected_components_converged_within_budget(spark):
-    """A chain whose diameter fits the budget converges: every node lands
-    in one cluster labeled by the min doc_id, with no warning/raise."""
-    chain = [(i, i + 1) for i in range(5)]
-    pairs = spark.createDataFrame(chain, ["doc_a", "doc_b"])
-    nodes = spark.createDataFrame([(i,) for i in range(6)], ["doc_id"])
-    labels = dedup.connected_components(pairs, nodes, max_iterations=6)
-    assert {r["cluster_id"] for r in labels.collect()} == {0}
+        rows = dedup.connected_components(pairs, nodes).collect()
+    assert not [w for w in caught if issubclass(w.category, RuntimeWarning)]
+    assert len(rows) == 20
+    assert {r["cluster_id"] for r in rows} == {0}
 
 
 def test_incremental_minhash_is_cross_set_only(spark, sf_dir):

@@ -24,9 +24,7 @@ def test_kept_doc_is_cluster_argmax_quality(spark):
     ).select("doc_a", "doc_b")
     labels = {
         r.doc_id: r.cluster_id
-        for r in dedup.connected_components(
-            pairs, d.select("doc_id"), max_iterations=10
-        ).collect()
+        for r in dedup.connected_components(pairs, d.select("doc_id")).collect()
     }
     quality = {
         r.doc_id: r.quality_score
