@@ -41,7 +41,7 @@ def int_hundredths(col: Column | str) -> Column:
     -> x100 -> BIGINT.  The deterministic fixed-point hop the
     event-analytics operators sum instead of floats (int64 sums are
     order-independent; giant DECIMAL->DOUBLE casts diverge from DuckDB in
-    the last ulp past 2^53 — see docs/ROADMAP.md Known constraints).
+    the last ulp past 2^53 — see docs/SCALE.md Known constraints).
 
     Oracle mirror, verbatim: ``CAST(CAST(value AS DECIMAL(12,2)) * 100 AS
     BIGINT)`` — single-sourced here so the Spark and SQL sides of every

@@ -101,7 +101,8 @@ def spread_input(df: DataFrame) -> DataFrame:
     parallelism, never an unconditional production exchange.  The
     ``df.rdd.getNumPartitions()`` probe forces one physical-planning pass,
     so call it once per query construction, never inside an iteration
-    loop (ADVICE r9).  Shared: ``similarity._spread`` delegates here."""
+    loop (ADVICE r9).  The one spread guard: the dedup, similarity
+    and ML-feature operators call it directly."""
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         df = df.repartition(par)
@@ -550,7 +551,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     it Spark recomputes the CPU-heavy hashing per consumer (measured: an
     unmaterialized shingle HOF inside the fused signature projection
     re-evaluates per signature column, 2× the whole pipeline — the
-    known-constraint in docs/ROADMAP.md).  ``shards`` spreads a
+    known-constraint in docs/SCALE.md).  ``shards`` spreads a
     few-files-input across cores (a 100 TB corpus arrives pre-split; a
     single local parquet file does not).
 

@@ -12,8 +12,12 @@ Three tiers, all over ``embeddings.embedding`` (array<float>):
   (IVF cluster probing, random-hyperplane LSH bucketing) whose candidate
   generation is an equi-join on bucket ids — the 100 TB shape.
 
-All vector math is higher-order-function fp64 (functions/vector.py): no
-Python UDFs on the hot path.
+All vector math is fp64 and comes from functions/vector.py in two tiers.
+The higher-order-function folds run JVM-side and are the reference
+semantics.  Their numpy twins (``np_dot``, ``np_cosine``, ``np_sq_l2``) run
+in Python workers over Arrow batches and are the default for the GEMM
+tiers.  Both accumulate dimension by dimension, left to right, so their
+outputs are bit-identical to each other and to the DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -27,6 +31,10 @@ from airflow_postgres_to_s3_pipeline_spark.functions.vector import (
     cosine_similarity,
     dot,
     l2_norm,
+    np_cosine,
+    np_dot,
+    np_sq_l2,
+    np_sq_norm,
     sq_l2,
     to_double_array,
 )
@@ -60,26 +68,11 @@ def _ieee_norm(col):
     )
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition to defaultParallelism ONLY when the input is narrower —
-    the single-file one-task trap (a corpus parquet under
-    maxPartitionBytes arrives as ONE partition, and the interpreted HOF
-    folds below then run their O(n x cells x dim) lambda steps in a
-    single task; embedding_near_dup measured that class of miss at 10x:
-    52s -> 5s).  Conditional so already-wide inputs (per-iteration Lloyd
-    calls on a repartitioned frame, GEMM-salted shards) don't pay a
-    useless full shuffle per call.  Single definition lives in
-    ``dedup.spread_input`` (r14: the text-side consumers gained the same
-    guard); this alias keeps the similarity-module callsites stable."""
-    return spread_input(df)
-
-
 def _salt_shards(df: DataFrame, n_shards: int) -> DataFrame:
     """Hash-salt a corpus frame into ``n_shards`` cogroup buckets — one
     half of the GEMM distribution pattern shared by every numpy tier
     (ivf/kmeans assign, knn, PQ encode, ADC scoring); single-sourced so
-    the sharding scheme cannot drift between tiers (r9 review: five
-    copies)."""
+    the sharding scheme cannot drift between tiers."""
     return df.withColumn(
         "shard", F.pmod(F.hash("vec_id"), F.lit(n_shards)).cast("int")
     )
@@ -95,6 +88,26 @@ def _replicate_per_shard(df: DataFrame, n_shards: int) -> DataFrame:
         F.broadcast(
             spark.range(n_shards).select(F.col("id").cast("int").alias("shard"))
         )
+    )
+
+
+def _cogroup_np(left: DataFrame, right: DataFrame, key: str, kernel,
+                schema: str) -> DataFrame:
+    """Run ``kernel(left_pdf, right_pdf)`` on each ``key`` group of a
+    cogroup — the plumbing of every numpy GEMM tier.  A group with an
+    empty side returns a column-less ``pd.DataFrame()``, which Spark reads
+    as zero rows of any schema; with queries or codebooks replicated to
+    every shard, each shard that got no corpus rows lands there, so a
+    kernel only ever sees two non-empty frames."""
+    def run(left_pdf, right_pdf):
+        import pandas as pd
+
+        if left_pdf.empty or right_pdf.empty:
+            return pd.DataFrame()
+        return kernel(left_pdf, right_pdf)
+
+    return (
+        left.groupBy(key).cogroup(right.groupBy(key)).applyInPandas(run, schema)
     )
 
 
@@ -147,7 +160,9 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    pairs = _spread(e).join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
+    pairs = spread_input(e).join(
+        F.broadcast(q), F.col("vec_id") != F.col("query_id")
+    )
     sim = F.round(cosine_similarity(F.col("qv"), F.col("v")), 4)
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()
@@ -279,7 +294,7 @@ def ivf_assign(e: DataFrame, centroids: DataFrame) -> DataFrame:
     )
     best_idx = F.array_position(F.col("_sims"), F.array_max(F.col("_sims")))
     return (
-        _spread(e).crossJoin(F.broadcast(packed))
+        spread_input(e).crossJoin(F.broadcast(packed))
         .withColumn("_nv", l2_norm(F.col("v")))
         .withColumn("_sims", sims)
         .withColumn(
@@ -349,34 +364,14 @@ def ivf_assign_gemm(e: DataFrame, centroids: DataFrame,
     matrix = ties to the lowest centroid_id, the shared tie rule.
 
     Measured at 500k vectors x 707 centroids: 443s (fold) -> ~25s."""
-    import pandas as pd  # noqa: F401
-
-    corpus = _salt_shards(e, n_shards)
-    c = _replicate_per_shard(centroids, n_shards)
-
     def assign(corpus_pdf, c_pdf):
         import numpy as np
         import pandas as pd
 
-        if corpus_pdf.empty or c_pdf.empty:
-            return pd.DataFrame(
-                {"vec_id": pd.Series(dtype="int64"),
-                 "v": pd.Series(dtype="object"),
-                 "centroid_id": pd.Series(dtype="int64")}
-            )
         c_pdf = c_pdf.sort_values("centroid_id")
         A = np.stack(corpus_pdf["v"].to_numpy())       # (n, dim)
         C = np.stack(c_pdf["cv"].to_numpy())           # (c, dim)
-        dim = A.shape[1]
-        acc = np.zeros((A.shape[0], C.shape[0]))
-        na = np.zeros(A.shape[0])
-        ca = np.zeros(C.shape[0])
-        for d in range(dim):
-            acc += np.multiply.outer(A[:, d], C[:, d])
-            na += A[:, d] * A[:, d]
-            ca += C[:, d] * C[:, d]
-        sim = acc / np.multiply.outer(np.sqrt(na), np.sqrt(ca))
-        idx = sim.argmax(axis=1)
+        idx = np_cosine(A, C).argmax(axis=1)
         cids = c_pdf["centroid_id"].to_numpy()
         return pd.DataFrame(
             {"vec_id": corpus_pdf["vec_id"].to_numpy(),
@@ -384,10 +379,9 @@ def ivf_assign_gemm(e: DataFrame, centroids: DataFrame,
              "centroid_id": cids[idx]}
         )
 
-    return (
-        corpus.groupBy("shard")
-        .cogroup(c.groupBy("shard"))
-        .applyInPandas(assign, "vec_id long, v array<double>, centroid_id long")
+    return _cogroup_np(
+        _salt_shards(e, n_shards), _replicate_per_shard(centroids, n_shards),
+        "shard", assign, "vec_id long, v array<double>, centroid_id long",
     )
 
 
@@ -637,7 +631,7 @@ def embedding_lsh_near_dup(spark: SparkSession, sf_dir: str,
       pseudo-random array (hash(plane*1000+dim) scaled to [-1,1]) on a
       broadcast 1-row frame, evaluated once — the round-1 version built
       n_planes x dim literal expressions on the driver, costing ~6s of
-      pure plan construction per call (docs/ROADMAP.md).
+      pure plan construction per call.
     """
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", to_double_array("embedding").alias("v")
@@ -810,9 +804,9 @@ def _lsh_band_signatures_gemm(spark: SparkSession, e: DataFrame,
     CodegenFallback per element — the same class of cost the knn_ivf /
     kmeans / PQ families already moved to numpy (ivf_assign_gemm,
     pq_encode_gemm).  Here each Arrow batch computes the (chunk x planes)
-    dot-product matrix with DIMENSION-ORDERED accumulation —
-    ``acc += outer(A[:, j], W[:, j])`` for j in order — which replays the
-    HOF fold's exact fp64 op sequence ``(...(0 + v0*w0) + v1*w1)...``, so
+    dot-product matrix with ``np_dot`` — dimension-ordered accumulation
+    that replays the HOF fold's exact fp64 op sequence
+    ``(...(0 + v0*w0) + v1*w1)...``, so
     every sign bit, and therefore every band value, is bit-identical to
     the expression tier and to DuckDB's list_reduce (parity pinned by
     tests/test_similarity.py).  The plane matrix is re-derived inside the
@@ -821,7 +815,7 @@ def _lsh_band_signatures_gemm(spark: SparkSession, e: DataFrame,
     engine) — a few KB recomputed once per task, nothing broadcast or
     shipped per row.
 
-    Input must carry (vec_id, v); `_spread` protects the single-file
+    Input must carry (vec_id, v); ``spread_input`` protects the single-file
     corpus from the one-task trap.  Output: (vec_id, bands) exactly like
     the expression tier.
     """
@@ -840,16 +834,9 @@ def _lsh_band_signatures_gemm(spark: SparkSession, e: DataFrame,
                 W[p, j] = (int(h[:15], 16) % 20001 - 10000) / 10000.0
         for pdf in batches:
             if pdf.empty:
-                yield pd.DataFrame(
-                    {"vec_id": pd.Series(dtype="int64"),
-                     "bands": pd.Series(dtype="object")}
-                )
                 continue
             A = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            acc = np.zeros((A.shape[0], n_planes))
-            for j in range(dim):
-                acc += np.multiply.outer(A[:, j], W[:, j])
-            bits = (acc >= 0).astype(np.int64)      # (n, planes)
+            bits = (np_dot(A, W) >= 0).astype(np.int64)     # (n, planes)
             bands = np.zeros((A.shape[0], n_bands), dtype=np.int64)
             for b in range(n_bands):
                 for k in range(bits_per_band):
@@ -858,7 +845,7 @@ def _lsh_band_signatures_gemm(spark: SparkSession, e: DataFrame,
                 {"vec_id": pdf["vec_id"].to_numpy(), "bands": list(bands)}
             )
 
-    return _spread(e.select("vec_id", "v")).mapInPandas(
+    return spread_input(e.select("vec_id", "v")).mapInPandas(
         sign_bands, "vec_id long, bands array<long>"
     )
 
@@ -1175,7 +1162,7 @@ def kmeans_assign(e: DataFrame, centroids: DataFrame,
     cannot inline the fold once per consumed field.
 
     ``spread=False`` is for iterative callers (the Lloyd loop) that widen
-    the corpus frame ONCE up front: the in-call ``_spread`` probe forces
+    the corpus frame ONCE up front: the in-call ``spread_input`` probe forces
     full physical planning through an RDD conversion and, on a narrow
     scan, a full repartition shuffle — per iteration (ADVICE r9).
     """
@@ -1207,7 +1194,7 @@ def kmeans_assign(e: DataFrame, centroids: DataFrame,
             ),
         ),
     )
-    wide = _spread(e) if spread else e
+    wide = spread_input(e) if spread else e
     return (
         wide.crossJoin(F.broadcast(packed))
         .withColumn("_best", best)
@@ -1240,40 +1227,24 @@ def kmeans_assign_gemm(e: DataFrame, centroids: DataFrame,
     centroid columns = ties to the lowest cluster_id, the shared rule.
 
     Row-tiled like semantic_dedup's pair stage: one (tile_rows x k)
-    accumulator bounded by ``tile_elems`` floats at a time, so per-task
-    memory stays constant however large a shard or the centroid set
-    grows."""
-    import pandas as pd  # noqa: F401
-
-    corpus = _salt_shards(e, n_shards)
-    c = _replicate_per_shard(centroids, n_shards)
-
+    ``np_sq_l2`` accumulator bounded by ``tile_elems`` floats at a time,
+    so per-task memory stays constant however large a shard or the
+    centroid set grows."""
     def assign(corpus_pdf, c_pdf):
         import numpy as np
         import pandas as pd
 
-        if corpus_pdf.empty or c_pdf.empty:
-            return pd.DataFrame(
-                {"vec_id": pd.Series(dtype="int64"),
-                 "v": pd.Series(dtype="object"),
-                 "cluster_id": pd.Series(dtype="int64"),
-                 "dist": pd.Series(dtype="float64")}
-            )
         c_pdf = c_pdf.sort_values("cluster_id")
         A = np.stack(corpus_pdf["v"].to_numpy())       # (n, dim)
         C = np.stack(c_pdf["cv"].to_numpy())           # (k, dim)
         cids = c_pdf["cluster_id"].to_numpy()
-        n, dim = A.shape
-        k = C.shape[0]
-        tile_rows = max(1, tile_elems // max(k, 1))
+        n = A.shape[0]
+        tile_rows = max(1, tile_elems // C.shape[0])
         idx = np.empty(n, dtype="int64")
         dmin = np.empty(n)
         for start in range(0, n, tile_rows):
             stop = min(start + tile_rows, n)
-            acc = np.zeros((stop - start, k))
-            for d in range(dim):
-                diff = A[start:stop, d, None] - C[None, :, d]
-                acc += diff * diff
+            acc = np_sq_l2(A[start:stop], C)
             local = acc.argmin(axis=1)
             idx[start:stop] = local
             dmin[start:stop] = acc[np.arange(stop - start), local]
@@ -1284,12 +1255,10 @@ def kmeans_assign_gemm(e: DataFrame, centroids: DataFrame,
              "dist": dmin}
         )
 
-    return (
-        corpus.groupBy("shard")
-        .cogroup(c.groupBy("shard"))
-        .applyInPandas(
-            assign, "vec_id long, v array<double>, cluster_id long, dist double"
-        )
+    return _cogroup_np(
+        _salt_shards(e, n_shards), _replicate_per_shard(centroids, n_shards),
+        "shard", assign,
+        "vec_id long, v array<double>, cluster_id long, dist double",
     )
 
 
@@ -1342,12 +1311,12 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str, k: int = 8,
     )
     # Widen + persist ONCE before the loop (ADVICE r9): every iteration
     # re-scans the corpus frame for its assignment fold, and the old
-    # in-call _spread re-paid both the getNumPartitions probe (full
+    # in-call spread_input re-paid both the getNumPartitions probe (full
     # physical planning through an RDD conversion) and a full repartition
     # shuffle of the narrow scan — per iteration.  corpus=True: the frame
     # carries the full vectors, so its level honours
     # SPARK_GRAFT_PERSIST_LEVEL (DISK_ONLY at 100 TB; see cache.py).
-    e = tracked_persist(_spread(e), corpus=True)
+    e = tracked_persist(spread_input(e), corpus=True)
     centroids = e.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cluster_id"), F.col("v").alias("cv")
     )
@@ -1514,7 +1483,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str,
     # The UDF filters on a margin-safe superset (threshold - 1e-4, raw
     # sims); the EXACT HALF_UP rounding + threshold happen in Spark, so
     # results stay bit-identical to the SQL oracle.  Accumulation is
-    # dimension-ordered, same as knn_gemm.
+    # dimension-ordered (np_dot / np_sq_norm), same as knn_gemm.
     margin = threshold - 1e-4
     # tile_elems was resolved at function entry and is captured in the
     # closure (NOT read from the module global inside the UDF) so tests
@@ -1524,24 +1493,14 @@ def semantic_dedup(spark: SparkSession, sf_dir: str,
         import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {"cluster_id": pd.Series(dtype="int64"),
-             "id_a": pd.Series(dtype="int64"),
-             "id_b": pd.Series(dtype="int64"),
-             "sim": pd.Series(dtype="float64")}
-        )
         n = len(pdf)
         if n < 2:
-            return empty
+            return pd.DataFrame()
         ids = pdf["vec_id"].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
         A = np.stack(pdf["v"].to_numpy())[order]
-        dim = A.shape[1]
-        na = np.zeros(n)
-        for d in range(dim):
-            na += A[:, d] * A[:, d]
-        rna = np.sqrt(na)
+        rna = np.sqrt(np_sq_norm(A))
         # ROW-TILED accumulation: one (tile_rows x n) block at a time, so
         # per-call extra memory is bounded by SEMDEDUP_TILE_ELEMS floats
         # no matter how large a skewed cluster grows.  The per-element
@@ -1551,10 +1510,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str,
         out_a, out_b, out_s = [], [], []
         for start in range(0, n - 1, tile_rows):
             stop = min(start + tile_rows, n)
-            acc = np.zeros((stop - start, n))
-            for d in range(dim):
-                acc += np.multiply.outer(A[start:stop, d], A[:, d])
-            sim = acc / np.multiply.outer(rna[start:stop], rna)
+            sim = np_dot(A[start:stop], A) / (rna[start:stop, None] * rna)
             # global upper triangle: column index > absolute row index
             ia, ib = np.nonzero(
                 np.arange(n)[None, :] > np.arange(start, stop)[:, None]
@@ -1733,43 +1689,24 @@ def knn_gemm(spark: SparkSession, sf_dir: str,
     F.round could amplify at a rounding boundary.  Rounding itself happens
     in Spark (HALF_UP), never numpy (banker's).
     """
-    import pandas as pd  # noqa: F401 (signature requirement)
-
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", to_double_array("embedding").alias("v")
     )
     if n_shards is None:
         n_shards = _gemm_shards(spark, table_rows(sf_dir, "embeddings"))
-    corpus = _salt_shards(e, n_shards)
-    q = _replicate_per_shard(
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv")),
-        n_shards,
+    q = e.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
 
     def gemm(corpus_pdf, q_pdf):
         import numpy as np
         import pandas as pd
 
-        if corpus_pdf.empty or q_pdf.empty:
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype="int64"),
-                 "neighbor_id": pd.Series(dtype="int64"),
-                 "sim": pd.Series(dtype="float64")}
-            )
         A = np.stack(corpus_pdf["v"].to_numpy())          # (n, dim)
         Q = np.stack(q_pdf["qv"].to_numpy())              # (q, dim)
-        n, dim = A.shape
-        nq = Q.shape[0]
+        n, nq = A.shape[0], Q.shape[0]
         # dimension-ordered accumulation == the HOF/DuckDB sequential fold
-        acc = np.zeros((n, nq))
-        na = np.zeros(n)
-        qa = np.zeros(nq)
-        for d in range(dim):
-            acc += np.multiply.outer(A[:, d], Q[:, d])
-            na += A[:, d] * A[:, d]
-            qa += Q[:, d] * Q[:, d]
-        sim = acc / np.multiply.outer(np.sqrt(na), np.sqrt(qa))
+        sim = np_cosine(A, Q)
         # zero-norm rows are not neighbors (shared semantics with
         # knn_bruteforce and the oracle): 0/0 = NaN would otherwise make
         # kth NaN and silently drop the WHOLE shard's candidates (every
@@ -1798,10 +1735,9 @@ def knn_gemm(spark: SparkSession, sf_dir: str,
              "sim": np.concatenate(out_s)}
         )
 
-    local = (
-        corpus.groupBy("shard")
-        .cogroup(q.groupBy("shard"))
-        .applyInPandas(gemm, "query_id long, neighbor_id long, sim double")
+    local = _cogroup_np(
+        _salt_shards(e, n_shards), _replicate_per_shard(q, n_shards),
+        "shard", gemm, "query_id long, neighbor_id long, sim double",
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()
@@ -2310,23 +2246,14 @@ def pq_score_cells(coded: DataFrame, probe: DataFrame, packed: DataFrame,
     cell's candidates against exactly the queries that probed it — the
     IVF pruning IS the cogroup key, no per-pair join row ever
     materializes in Catalyst.  Same numpy LUT arithmetic as
-    ``pq_score_gemm`` (subspace-ordered accumulation — bit-identical to
-    the HOF fold and the shared oracle).  The scoring body is duplicated
-    inline rather than shared because applyInPandas closures must stay
-    self-contained for executor shipping (the repo convention)."""
+    ``pq_score_gemm`` (``_adc_scores`` — bit-identical to the HOF fold
+    and the shared oracle)."""
     probe_cb = probe.crossJoin(F.broadcast(_pq_codebook_flat(packed)))
 
     def score(codes_pdf, q_pdf):
         import numpy as np
         import pandas as pd
 
-        if codes_pdf.empty or q_pdf.empty:
-            empty = {"query_id": pd.Series(dtype="int64"),
-                     "neighbor_id": pd.Series(dtype="int64"),
-                     "adist": pd.Series(dtype="float64")}
-            if with_cell:
-                empty["centroid_id"] = pd.Series(dtype="int64")
-            return pd.DataFrame(empty)
         C = np.asarray(
             q_pdf.iloc[0]["_cbflat"], dtype=np.float64
         ).reshape(-1, m * subd)
@@ -2334,17 +2261,8 @@ def pq_score_cells(coded: DataFrame, probe: DataFrame, packed: DataFrame,
         vec_ids = codes_pdf["vec_id"].to_numpy()
         out = []
         for _, qrow in q_pdf.drop_duplicates("query_id").iterrows():
-            qv = np.asarray(qrow["qv"], dtype=np.float64)
             qid = qrow["query_id"]
-            adist = np.zeros(codes_mat.shape[0])
-            for s in range(m):
-                qs = qv[s * subd:(s + 1) * subd]
-                Cs = C[:, s * subd:(s + 1) * subd]
-                lut = np.zeros(C.shape[0])
-                for d in range(subd):
-                    diff = qs[d] - Cs[:, d]
-                    lut += diff * diff
-                adist += lut[codes_mat[:, s]]
+            adist = _adc_scores(C, codes_mat, qrow["qv"], m, subd)
             keep = vec_ids != qid
             # raw adist out of the worker; rounding happens in Spark
             # below (HALF_UP, the module rule) — np.round is banker's
@@ -2363,12 +2281,9 @@ def pq_score_cells(coded: DataFrame, probe: DataFrame, packed: DataFrame,
     schema = "query_id long, neighbor_id long, adist double"
     if with_cell:
         schema += ", centroid_id long"
-    return (
-        coded.groupBy("centroid_id")
-        .cogroup(probe_cb.groupBy("centroid_id"))
-        .applyInPandas(score, schema)
-        .withColumn("adist", F.round("adist", 4))
-    )
+    return _cogroup_np(
+        coded, probe_cb, "centroid_id", score, schema
+    ).withColumn("adist", F.round("adist", 4))
 
 
 def _knn_ivfpq_oracle(m: int = PQ_M, subd: int = PQ_SUBD,
@@ -2556,14 +2471,14 @@ def pq_encode_gemm(e: DataFrame, packed: DataFrame, n_shards: int,
                    m: int = PQ_M, subd: int = PQ_SUBD,
                    carry: tuple = ()) -> DataFrame:
     """``_pq_codes_col`` at GEMM speed: the corpus is salted into shards
-    and cogrouped with the engine-replicated packed codebook (the
+    and cogrouped with the engine-replicated flat codebook (the
     ``ivf_assign_gemm`` distribution pattern — no driver collect); each
-    Arrow batch computes all (chunk x ksub) sub-distances in numpy with
-    DIMENSION-ORDERED accumulation — ``acc += (A[:,d] - C[:,d])**2`` for
-    d in order — which is bit-identical to the sequential HOF fold and to
-    DuckDB's list_reduce, so the argmin (np.argmin keeps the FIRST
-    minimum = lowest code, the shared tie rule) picks the same code and
-    the result shares the same exact oracle.
+    Arrow batch computes all (chunk x ksub) sub-distances per subspace
+    with ``np_sq_l2`` — DIMENSION-ORDERED accumulation, bit-identical to
+    the sequential HOF fold and to DuckDB's list_reduce, so the argmin
+    (np.argmin keeps the FIRST minimum = lowest code, the shared tie
+    rule) picks the same code and the result shares the same exact
+    oracle.
 
     This is the index-build tier you'd ship at 100x corpus size: the HOF
     encode is n x m x ksub x subd interpreted lambda steps
@@ -2575,32 +2490,18 @@ def pq_encode_gemm(e: DataFrame, packed: DataFrame, n_shards: int,
     (e.g. a precomputed IVF centroid_id), so composed pipelines avoid a
     second vec_id shuffle join.
     """
-    corpus = _salt_shards(e, n_shards)
-    cbs = _replicate_per_shard(packed, n_shards)
-
     def encode(corpus_pdf, cb_pdf):
         import numpy as np
         import pandas as pd
 
-        if corpus_pdf.empty or cb_pdf.empty:
-            return pd.DataFrame(
-                {"vec_id": pd.Series(dtype="int64"),
-                 **{c: pd.Series(dtype="int64") for c in carry},
-                 "codes": pd.Series(dtype="object")}
-            )
-        # packed row: list of (code, cv) structs sorted by code
-        cs = cb_pdf.iloc[0]["_cs"]
-        C = np.stack([np.asarray(c["cv"], dtype=np.float64) for c in cs])
+        C = np.asarray(
+            cb_pdf.iloc[0]["_cbflat"], dtype=np.float64
+        ).reshape(-1, m * subd)
         A = np.stack(corpus_pdf["v"].to_numpy()).astype(np.float64)
         codes = np.zeros((A.shape[0], m), dtype=np.int64)
         for s in range(m):
-            As = A[:, s * subd:(s + 1) * subd]
-            Cs = C[:, s * subd:(s + 1) * subd]
-            acc = np.zeros((As.shape[0], Cs.shape[0]))
-            for d in range(subd):
-                diff = np.subtract.outer(As[:, d], Cs[:, d])
-                acc += diff * diff
-            codes[:, s] = acc.argmin(axis=1)
+            sub = slice(s * subd, (s + 1) * subd)
+            codes[:, s] = np_sq_l2(A[:, sub], C[:, sub]).argmin(axis=1)
         return pd.DataFrame(
             {"vec_id": corpus_pdf["vec_id"].to_numpy(),
              **{c: corpus_pdf[c].to_numpy() for c in carry},
@@ -2610,10 +2511,10 @@ def pq_encode_gemm(e: DataFrame, packed: DataFrame, n_shards: int,
     out_schema = "vec_id long, " + "".join(
         f"{c} long, " for c in carry
     ) + "codes array<long>"
-    return (
-        corpus.groupBy("shard")
-        .cogroup(cbs.groupBy("shard"))
-        .applyInPandas(encode, out_schema)
+    return _cogroup_np(
+        _salt_shards(e, n_shards),
+        _replicate_per_shard(_pq_codebook_flat(packed), n_shards),
+        "shard", encode, out_schema,
     )
 
 
@@ -2645,16 +2546,35 @@ ORACLES["knn_pq_fold"] = ORACLES["knn_pq"]
 
 def _pq_codebook_flat(packed: DataFrame) -> DataFrame:
     """1-row frame with the codebook as ONE flat array<double> (ksub x
-    dim, row-major in code order).  The nested list<struct<code,
-    cv:list<double>>> form segfaults pyarrow's arrow_to_pandas when
-    shipped through a cogroup at some batch shapes (observed at sf0.1 in
-    pq_score_cells; worker dies in serializers.arrow_to_pandas) — a flat
-    double list round-trips safely and reshapes in one numpy call."""
+    dim, row-major in code order) — the one codebook shape the numpy
+    tiers (PQ encode and both ADC scorers) ship into Python.  The nested
+    list<struct<code, cv:list<double>>> form segfaults pyarrow's
+    arrow_to_pandas when shipped through a cogroup at some batch shapes
+    (observed at sf0.1 in pq_score_cells; worker dies in
+    serializers.arrow_to_pandas) — a flat double list round-trips safely
+    and reshapes in one numpy call."""
     return packed.select(
         F.flatten(
             F.transform(F.col("_cs"), lambda c: c["cv"])
         ).alias("_cbflat")
     )
+
+
+def _adc_scores(C, codes, qv, m: int, subd: int):
+    """Asymmetric distances of one query ``qv`` to every code row of
+    ``codes`` (n x m) over the flat codebook ``C`` (ksub x m*subd): per
+    subspace s, the LUT ``np_sq_l2(q_s, C_s)`` over the ksub
+    sub-centroids, gathered at ``codes[:, s]`` and added in subspace
+    order — the two-level grouping of the HOF fold
+    ``sum_s d2(q_s, cb[s][c_s])``, so bit-identical to it."""
+    import numpy as np
+
+    qv = np.asarray(qv, dtype=np.float64)
+    adist = np.zeros(codes.shape[0])
+    for s in range(m):
+        sub = slice(s * subd, (s + 1) * subd)
+        adist += np_sq_l2(qv[None, sub], C[:, sub])[0][codes[:, s]]
+    return adist
 
 
 def pq_score_gemm(codes: DataFrame, q: DataFrame, packed: DataFrame,
@@ -2667,14 +2587,14 @@ def pq_score_gemm(codes: DataFrame, q: DataFrame, packed: DataFrame,
     the corpus); each Arrow batch builds the per-query 16x64 LUT in numpy
     with DIMENSION-ORDERED accumulation and scores candidates with m
     table-gathers accumulated IN SUBSPACE ORDER — the same two-level fp64
-    grouping as the HOF fold ``sum_s d2(q_s, cb[s][c_s])``, so adist is
-    bit-identical to the interpreted tier and the shared oracle.
+    grouping as the HOF fold ``sum_s d2(q_s, cb[s][c_s])`` (``_adc_scores``),
+    so adist is bit-identical to the interpreted tier and the shared
+    oracle.
 
     Per-candidate cost drops from ~120us of interpreted lambda steps
     (measured at sf0.1: ~2.4s for 20k pairs) to m numpy gathers — the
     difference between an ANN serving path and a demo.
     """
-    salted = _salt_shards(codes, n_shards)
     q_rep = _replicate_per_shard(
         q.crossJoin(F.broadcast(_pq_codebook_flat(packed))), n_shards
     )
@@ -2683,17 +2603,6 @@ def pq_score_gemm(codes: DataFrame, q: DataFrame, packed: DataFrame,
         import numpy as np
         import pandas as pd
 
-        if codes_pdf.empty or q_pdf.empty:
-            # This branch is HOT, not exceptional: queries replicate to
-            # all n_shards, so every shard with no corpus rows (small or
-            # hash-sparse corpora) lands here.  Must emit the plain
-            # 3-column frame matching the applyInPandas schema — this
-            # function has no with_cell mode (that's pq_score_cells).
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype="int64"),
-                 "neighbor_id": pd.Series(dtype="int64"),
-                 "adist": pd.Series(dtype="float64")}
-            )
         C = np.asarray(
             q_pdf.iloc[0]["_cbflat"], dtype=np.float64
         ).reshape(-1, m * subd)
@@ -2701,17 +2610,8 @@ def pq_score_gemm(codes: DataFrame, q: DataFrame, packed: DataFrame,
         vec_ids = codes_pdf["vec_id"].to_numpy()
         out = []
         for _, qrow in q_pdf.drop_duplicates("query_id").iterrows():
-            qv = np.asarray(qrow["qv"], dtype=np.float64)
             qid = qrow["query_id"]
-            adist = np.zeros(codes_mat.shape[0])
-            for s in range(m):
-                qs = qv[s * subd:(s + 1) * subd]
-                Cs = C[:, s * subd:(s + 1) * subd]
-                lut = np.zeros(C.shape[0])
-                for d in range(subd):
-                    diff = qs[d] - Cs[:, d]
-                    lut += diff * diff
-                adist += lut[codes_mat[:, s]]
+            adist = _adc_scores(C, codes_mat, qrow["qv"], m, subd)
             keep = vec_ids != qid
             a, nid = adist[keep], vec_ids[keep]
             # per-shard prune (the knn_gemm pattern, r9 review): keep the
@@ -2734,12 +2634,10 @@ def pq_score_gemm(codes: DataFrame, q: DataFrame, packed: DataFrame,
             ))
         return pd.concat(out, ignore_index=True)
 
-    return (
-        salted.groupBy("shard")
-        .cogroup(q_rep.groupBy("shard"))
-        .applyInPandas(score, "query_id long, neighbor_id long, adist double")
-        .withColumn("adist", F.round("adist", 4))
-    )
+    return _cogroup_np(
+        _salt_shards(codes, n_shards), q_rep, "shard", score,
+        "query_id long, neighbor_id long, adist double",
+    ).withColumn("adist", F.round("adist", 4))
 
 
 def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

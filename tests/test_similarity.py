@@ -590,10 +590,11 @@ def test_knn_probe_sweep_invariants(spark, sf_dir):
 
 
 def test_pq_score_gemm_handles_empty_corpus_shards(spark, sf_dir):
-    """Regression (r8 advice): queries replicate to ALL n_shards, so any
-    shard with no corpus rows runs score()'s empty branch — which used to
-    reference pq_score_cells' ``with_cell`` flag and die with NameError.
-    A 3-row corpus over 8 shards guarantees several empty shards."""
+    """Queries, centroids and codebooks replicate to ALL n_shards, so any
+    shard with no corpus rows takes the cogroup runner's empty-side
+    branch.  A 3-row corpus over 8 shards guarantees several empty
+    shards; every cogroup tier must still return its fold reference's
+    rows."""
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", similarity.to_double_array("embedding").alias("v")
     )
@@ -609,6 +610,59 @@ def test_pq_score_gemm_handles_empty_corpus_shards(spark, sf_dir):
     assert {(r.query_id, r.neighbor_id) for r in rows} == {
         (0, 1), (0, 2), (1, 0), (1, 2)
     }
+
+    # every other cogroup tier over the same 8 mostly-empty shards
+    # returns the rows of its fold reference
+    def rowset(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    cents = e.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
+    )
+    assert rowset(similarity.ivf_assign_gemm(tiny, cents, 8)) == rowset(
+        similarity.ivf_assign(tiny, cents)
+    )
+    clusters = cents.withColumnRenamed("centroid_id", "cluster_id")
+    assert rowset(similarity.kmeans_assign_gemm(tiny, clusters, 8)) == rowset(
+        similarity.kmeans_assign(tiny, clusters)
+    )
+    fold_codes = tiny.crossJoin(
+        F.broadcast(similarity._pq_codebook_nested(packed))
+    ).select("vec_id", similarity._pq_codes_col().alias("codes"))
+    gemm_codes = rowset(similarity.pq_encode_gemm(tiny, packed, 8))
+    assert gemm_codes == rowset(fold_codes) and len(gemm_codes) == 3
+
+
+def test_numpy_twins_bit_identical_to_hof_folds(spark):
+    """np_dot / np_sq_l2 and the cosine built from them equal the RAW,
+    unrounded doubles of the HOF folds bit for bit — the entry-level
+    parity tests compare rounded outputs and can miss a 1-ulp drift
+    (a blocked ``A @ B.T`` is such a drift)."""
+    from airflow_postgres_to_s3_pipeline_spark.functions import vector as V
+
+    rnd = np.random.default_rng(11)
+    scale = 10.0 ** rnd.integers(-3, 4, size=(12, 1))   # mixed magnitudes
+    M = rnd.uniform(-1.0, 1.0, size=(12, 64)) * scale
+    A, B = M[:5], M[5:]
+    df = spark.createDataFrame(
+        [(i, j, A[i].tolist(), B[j].tolist())
+         for i in range(len(A)) for j in range(len(B))],
+        "i int, j int, a array<double>, b array<double>",
+    ).select(
+        "i", "j",
+        V.dot(F.col("a"), F.col("b")).alias("dot"),
+        V.sq_l2(F.col("a"), F.col("b")).alias("sq_l2"),
+        V.cosine_similarity(F.col("a"), F.col("b")).alias("cos"),
+        V.l2_norm(F.col("a")).alias("norm_a"),
+    )
+    dot, sq, cos = V.np_dot(A, B), V.np_sq_l2(A, B), V.np_cosine(A, B)
+    rows = df.collect()
+    assert len(rows) == len(A) * len(B)
+    for r in rows:
+        assert r["dot"] == dot[r["i"], r["j"]]
+        assert r["sq_l2"] == sq[r["i"], r["j"]]
+        assert r["cos"] == cos[r["i"], r["j"]]
+        assert r["norm_a"] == np.sqrt(V.np_sq_norm(A))[r["i"]]
 
 
 def test_knn_zero_norm_vectors_are_not_neighbors(spark, tmp_path):

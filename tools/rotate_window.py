@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Stalest-evidence-first driver-window rotation (r11 verdict task 1).
 
-Policy (docs/ROADMAP.md "Window rotation policy"): each round the
+Policy: each round the
 DRIVER_WINDOW slots go to
 
   1. one sentinel per SURVEY.md §2 family — the family's STALEST member
