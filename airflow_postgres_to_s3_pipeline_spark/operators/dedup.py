@@ -63,8 +63,6 @@ _oracle(
 def dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT-ON semantics: full surviving row (lowest doc_id) per text."""
     d = table(spark, sf_dir, "documents")
-    from pyspark.sql import Window
-
     w = Window.partitionBy("text").orderBy(F.col("doc_id").asc())
     return (
         d.withColumn("rn", F.row_number().over(w))
@@ -102,7 +100,9 @@ def spread_input(df: DataFrame) -> DataFrame:
     ``df.rdd.getNumPartitions()`` probe forces one physical-planning pass,
     so call it once per query construction, never inside an iteration
     loop (ADVICE r9).  The one spread guard: the dedup, similarity
-    and ML-feature operators call it directly."""
+    and ML-feature operators call it directly, as do the text-LSH
+    pipelines (``minhash_lsh_pairs``, ``simhash_near_pairs``) and
+    ``text.winnowing_fingerprint`` / ``text.winnowing_dedup``."""
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         df = df.repartition(par)
@@ -144,34 +144,21 @@ def shingle(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     )
 
 
-def minhash_signatures(shingles: DataFrame, n_hashes: int = 32) -> DataFrame:
-    """MinHash signature per doc, row-local: sig_i = min over the shingle
-    array of xxhash64(shingle, seed_i).
-
-    ``array_min(transform(...))`` keeps all n_hashes slots inside the scan
-    stage — zero shuffles (the exploded groupBy-min formulation shuffles
-    the entire shingle table, which is corpus-sized).
-    """
-    sig_cols = [
-        F.array_min(
-            F.transform(F.col("shingles"), lambda s: F.xxhash64(s, F.lit(seed)))
-        ).alias(f"h{seed}")
-        for seed in range(n_hashes)
-    ]
-    return shingles.select("doc_id", *sig_cols)
-
-
 MERSENNE_P = 2147483647  # 2^31 - 1; the MinHash value space for the md5 tier
 
 
 def minhash_signatures_md5(shingles: DataFrame, n_hashes: int = 32) -> DataFrame:
-    """MinHash signatures derived from ONE md5 per shingle — the
-    DuckDB-oracle-checkable tier, served by the vectorized numpy kernel
-    (``_minhash_signatures_md5_np``; r13 optimization, guide §4.2).
+    """MinHash signatures derived from ONE md5 per shingle — the text-LSH
+    hash family, whose every step has an exact DuckDB mirror.  One
+    mapInPandas pass computes, per shingle, the (x1, x2)
+    Kirsch-Mitzenmacher pair (md5 hex slices 1-15 / 16-30 -> int64 mod
+    p / mod p-1 + 1) and then all ``n_hashes`` slot minima with
+    vectorized segment-min (``np.minimum.reduceat``) instead of 32
+    interpreted array transforms (r13 optimization, guide §4.2).
 
     The expression formulation (``minhash_signatures_md5_expr``) is kept
     as the SQL-mirror reference: every value it produces is pure integer
-    arithmetic over md5 hex slices, so the numpy tier reproduces it
+    arithmetic over md5 hex slices, so this kernel reproduces it
     BIT-identically (hashlib md5 == Spark md5 == DuckDB md5; int64
     add/mul/mod have no rounding) — pinned by
     tests/test_dedup.py::test_minhash_signatures_np_matches_expr.
@@ -179,19 +166,6 @@ def minhash_signatures_md5(shingles: DataFrame, n_hashes: int = 32) -> DataFrame
     ~1.0s -> ~0.2s (the 32 interpreted transform/array_min HOF passes
     and the per-shingle conv(hex) pair were the cost — same class as the
     hyperplane-LSH fold the GEMM tier replaced).
-    """
-    return _minhash_signatures_md5_np(shingles, n_hashes)
-
-
-def _minhash_signatures_md5_np(shingles: DataFrame,
-                               n_hashes: int = 32) -> DataFrame:
-    """Numpy kernel for the md5 MinHash tier: one mapInPandas pass that
-    computes, per shingle, the same (x1, x2) Kirsch-Mitzenmacher pair the
-    expression tier derives (md5 hex slices 1-15 / 16-30 -> int64 mod
-    p / mod p-1 + 1) and then all ``n_hashes`` slot minima with
-    vectorized segment-min (``np.minimum.reduceat``) instead of 32
-    interpreted array transforms.  Integer-exact, so bit-identical to
-    ``minhash_signatures_md5_expr`` and to the SQL oracles.
 
     The per-slot candidate values are bounded by x1 + 31*x2 < 2^36, far
     inside int64 — no overflow; ``%`` on non-negative int64 matches
@@ -273,8 +247,8 @@ def minhash_signatures_md5_expr(shingles: DataFrame,
     [0, p) / [1, p-1] ranges.  Every step (md5, hex→bigint, modular
     arithmetic, array min) is bit-identical in any engine with md5 +
     64-bit integers, so the full signature→band→candidate→Jaccard chain
-    carries an exact SQL oracle — unlike the xxhash64 tier, whose hash
-    DuckDB cannot mirror.  Still entirely row-local (zero shuffles), one
+    carries an exact SQL oracle (Spark's seeded hash functions have no
+    DuckDB mirror).  Still entirely row-local (zero shuffles), one
     md5 + two hex→bigint conversions per shingle (the per-slot work is
     two adds and a mod over a 2-field struct array; the second conv
     showed no whole-query regression at sf0.1 — minhash_lsh_dedup
@@ -321,39 +295,29 @@ def minhash_signatures_md5_expr(shingles: DataFrame,
 
 
 def banded_keys(signatures: DataFrame, n_hashes: int = 32,
-                bands: int = 8, checkable: bool = False) -> DataFrame:
+                bands: int = 8) -> DataFrame:
     """Explode a signature frame into (doc_id, band, band_hash) rows — the
     shared banding step of the self-join (``lsh_candidate_pairs``) and
-    cross-set (``dedup_incremental_minhash``) LSH paths."""
+    cross-set (``dedup_incremental_minhash``) LSH paths.  The band key is
+    the band's signature values joined with ``|``: band equality is exact
+    and the SQL oracles mirror the key string (a 4-byte murmur3 key would
+    thin the shuffle rows but has no SQL mirror)."""
     rows = n_hashes // bands
-    if checkable:
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"h{b * rows + r}").cast("string")
-                            for r in range(rows)
-                        ],
-                    ).alias("band_hash"),
-                )
-                for b in range(bands)
-            ]
-        )
-    else:
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.hash(*[F.col(f"h{b * rows + r}") for r in range(rows)]).alias(
-                        "band_hash"
-                    ),
-                )
-                for b in range(bands)
-            ]
-        )
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.concat_ws(
+                    "|",
+                    *[
+                        F.col(f"h{b * rows + r}").cast("string")
+                        for r in range(rows)
+                    ],
+                ).alias("band_hash"),
+            )
+            for b in range(bands)
+        ]
+    )
     return signatures.select(
         "doc_id", F.explode(band_structs).alias("bh")
     ).select(
@@ -447,7 +411,7 @@ def _bucket_pair_expansion(banded: DataFrame, group_cols: tuple[str, ...],
 
 
 def lsh_candidate_pairs(signatures: DataFrame, n_hashes: int = 32,
-                        bands: int = 8, checkable: bool = False,
+                        bands: int = 8,
                         max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
     """Band the signatures and pair docs sharing a (band, band_hash) bucket.
 
@@ -471,13 +435,8 @@ def lsh_candidate_pairs(signatures: DataFrame, n_hashes: int = 32,
     asserted by test).  ``max_bucket=0/None`` (the debug/eval convention)
     keeps the distributed reference self-join, exactly like
     ``graph._basket_pair_edges`` (see ``_bucket_pair_expansion``).
-
-    ``checkable=True`` keys the bands by the concatenated signature values
-    (exactly mirrorable in SQL) instead of murmur3 — band equality is the
-    same either way; murmur3 just packs the key into 4 bytes for the
-    shuffle, which is the right trade at 100 TB but opaque to the oracle.
     """
-    banded = banded_keys(signatures, n_hashes, bands, checkable)
+    banded = banded_keys(signatures, n_hashes, bands)
     if not max_bucket:
         a = banded.alias("a")
         b = banded.alias("b")
@@ -535,14 +494,12 @@ def verify_jaccard(candidates: DataFrame, shingles: DataFrame,
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", n_hashes: int = 32,
                       bands: int = 8, k: int = 3,
-                      threshold: float = 0.6,
-                      shards: int | None = None,
-                      checkable: bool = False) -> DataFrame:
+                      threshold: float = 0.6) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle -> sign -> band -> verify.
 
-    ``checkable=True`` swaps the xxhash64 signature/murmur3 band tier for
-    the md5 double-hashing tier (``minhash_signatures_md5``) whose every
-    step has an exact SQL mirror — same plan shape, same shuffle count.
+    Signatures are the md5 double-hashing family
+    (``minhash_signatures_md5``) and bands are keyed by their concatenated
+    values, so every step has an exact SQL mirror (``_minhash_lsh_oracle``).
 
     Only two shuffles end-to-end regardless of corpus size: the banded
     candidate self-join and the candidate->shingle lookup; everything else
@@ -551,8 +508,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     it Spark recomputes the CPU-heavy hashing per consumer (measured: an
     unmaterialized shingle HOF inside the fused signature projection
     re-evaluates per signature column, 2× the whole pipeline — the
-    known-constraint in docs/SCALE.md).  ``shards`` spreads a
-    few-files-input across cores (a 100 TB corpus arrives pre-split; a
+    known-constraint in docs/SCALE.md).  ``spread_input`` spreads a
+    one-partition input across cores (a 100 TB corpus arrives pre-split; a
     single local parquet file does not).
 
     Persistence hygiene: the persisted intermediates live until the session
@@ -563,15 +520,13 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     checkpoint to reliable storage) rather than memory — the barrier is
     what matters, not the medium.
     """
-    if shards:
-        df = df.repartition(shards)
+    df = spread_input(df)
     # shingles carry the corpus text as arrays -> corpus-sized cache;
     # signatures are (doc_id, 32 longs) -> thin.  Both registered with the
     # cache tracker so the terminal consumer releases them (cache.py).
     sh = tracked_persist(shingle_arrays(df, text_col, id_col, k), corpus=True)
-    sign = minhash_signatures_md5 if checkable else minhash_signatures
-    sig = tracked_persist(sign(sh, n_hashes))
-    cand = lsh_candidate_pairs(sig, n_hashes, bands, checkable=checkable)
+    sig = tracked_persist(minhash_signatures_md5(sh, n_hashes))
+    cand = lsh_candidate_pairs(sig, n_hashes, bands)
     return verify_jaccard(cand, sh, threshold)
 
 
@@ -584,9 +539,7 @@ def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine) gives the whole pipeline an exact DuckDB oracle — the same
     banding recall/precision trade, none of the unverifiability.
     """
-    d = table(spark, sf_dir, "documents")
-    shards = spark.sparkContext.defaultParallelism
-    return minhash_lsh_pairs(d, shards=shards, checkable=True)
+    return minhash_lsh_pairs(table(spark, sf_dir, "documents"))
 
 
 def _lsh_chain_sql(n_hashes: int = 32, bands: int = 8,
@@ -681,7 +634,7 @@ def _lsh_band_cand_sql(n_hashes: int = 32, bands: int = 8,
 def _minhash_lsh_oracle(n_hashes: int = 32, bands: int = 8,
                         threshold: float = 0.6,
                         source: str = "SELECT doc_id, text FROM documents") -> str:
-    """Generate the exact SQL mirror of ``minhash_lsh_pairs(checkable=True)``:
+    """Generate the exact SQL mirror of ``minhash_lsh_pairs``:
     the shared LSH candidate chain plus exact-Jaccard verification.
     ``source`` is any (doc_id, text) relation, so the same template oracles
     doc-level and chunk-level near-dedup.
@@ -841,7 +794,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str,
     # as the oracle's self-join chain — a hub bucket is a hub regardless
     # of which side its members arrive on.
     banded = tracked_persist(
-        _cap_buckets(banded_keys(sig, checkable=True), LSH_MAX_BUCKET)
+        _cap_buckets(banded_keys(sig), LSH_MAX_BUCKET)
     )
     ex = banded.filter(F.col("doc_id") < split)
     inc = banded.filter(F.col("doc_id") >= split)
@@ -991,9 +944,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     union-find equivalence and determinism are additionally pinned in tests.
     """
     d = table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        d, shards=spark.sparkContext.defaultParallelism, checkable=True
-    ).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(d).select("doc_a", "doc_b")
     # include_singletons=False: the final filter keeps only size>1
     # clusters, whose members are all edge nodes — the corpus-sized
     # singleton anti-join/union and their trip through this aggregate are
@@ -1063,9 +1014,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from airflow_postgres_to_s3_pipeline_spark.operators.text import doc_quality
 
     d = table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        d, shards=spark.sparkContext.defaultParallelism, checkable=True
-    ).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(d).select("doc_a", "doc_b")
     # edge-node labels only (see dedup_components): the size>1 filter
     # makes singleton clusters unreachable, so the quality join and both
     # cluster aggregates run over |edge nodes| rows, not |corpus| (r14)
@@ -1143,77 +1092,26 @@ _oracle("dedup_keep_best", _dedup_keep_best_oracle())
 # E25b: SimHash near-dedup
 # ---------------------------------------------------------------------------
 
-def simhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", bits: int = 64) -> DataFrame:
-    """64-bit SimHash per document, fully row-local (zero shuffles).
-
-    Token hashes are computed once into an array; each bit's +1/-1 vote sum
-    is a higher-order fold over that array.  The whole signature stage runs
-    inside the scan's map phase — the exploded groupBy formulation would
-    shuffle every token in the corpus.
-    """
-    token_hashes = F.transform(
-        F.filter(F.split(text_col, " "), lambda t: F.length(t) > 0),
-        lambda t: F.xxhash64(t),
-    )
-    hashed = df.select(F.col(id_col).alias("doc_id"), token_hashes.alias("ths"))
-
-    # Two-select formulation: 64 independent vote columns, then pack.  One
-    # fused 64-term expression measured 2x slower (the giant tree falls out
-    # of whole-stage codegen); independent columns stay codegen-friendly —
-    # same lesson as the MinHash column-vs-array measurement.
-    def _bit_set(i: int):
-        # factory so the single-arg lambda closes over i (a default arg
-        # would make PySpark treat it as an (element, index) lambda)
-        return lambda h: F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1
-
-    vote_cols = []
-    for i in range(bits):
-        # votes_i = (#tokens with bit i set) * 2 - n_tokens
-        set_count = F.size(F.filter(F.col("ths"), _bit_set(i)))
-        vote_cols.append((set_count * 2 - F.size("ths")).alias(f"_v{i}"))
-    voted = hashed.select("doc_id", *vote_cols)
-
-    # Assemble the signature with shifts + bitwise OR (no arithmetic on the
-    # sign bit at i=63, safe under ANSI overflow checking).
-    sig = None
-    for i in range(bits):
-        term = F.when(
-            F.col(f"_v{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
-        ).otherwise(F.lit(0).cast("long"))
-        sig = term if sig is None else sig.bitwiseOR(term)
-    return voted.select("doc_id", sig.alias("simhash"))
-
-
-SIMHASH_MD5_BITS = 60  # bits of md5 prefix used by the checkable tier
+SIMHASH_MD5_BITS = 60  # bits of md5 prefix per token hash
 
 
 def simhash_signatures_md5(df: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id",
                            bits: int = SIMHASH_MD5_BITS) -> DataFrame:
-    """SimHash from md5-derived token hashes — the DuckDB-oracle-checkable
-    tier, served by the vectorized numpy kernel (r13 optimization, guide
-    §4.2: the 60 per-bit HOF filter passes over every doc's token-hash
-    array were 2.4s of simhash_dedup's 2.9s at sf0.1; the kernel computes
-    the same votes with 60 ``np.add.reduceat`` segment sums at ~0.2s).
-    All integer arithmetic (md5 hex slice -> int64, counts, shifts), so
-    the signatures are BIT-identical to the expression tier
-    (``simhash_signatures_md5_expr``) and the SQL oracles — pinned by
-    tests/test_dedup.py::test_simhash_signatures_np_matches_expr.
-    """
-    return _simhash_signatures_md5_np(df, text_col, id_col, bits)
-
-
-def _simhash_signatures_md5_np(df: DataFrame, text_col: str = "text",
-                               id_col: str = "doc_id",
-                               bits: int = SIMHASH_MD5_BITS) -> DataFrame:
-    """Numpy kernel for the md5 SimHash tier: one mapInPandas pass that
+    """SimHash from md5-derived token hashes — the text-LSH hash family,
+    whose every step has an exact DuckDB mirror.  One mapInPandas pass
     tokenizes exactly like the expression tier (split on single spaces,
     empty tokens dropped, zero-token docs omitted), hashes each token to
     its 60-bit md5 prefix, and assembles the signature from vectorized
     per-bit vote sums: v_i = 2 * count(bit i set) - n_tokens, bit i of
-    the signature = (v_i > 0).  Integer-exact, hence bit-identical to
-    ``simhash_signatures_md5_expr`` and the QUALIFY-mirrored oracles."""
+    the signature = (v_i > 0).  r13 optimization, guide §4.2: the 60
+    per-bit HOF filter passes over every doc's token-hash array were 2.4s
+    of simhash_dedup's 2.9s at sf0.1; the 60 ``np.add.reduceat`` segment
+    sums take ~0.2s.  All integer arithmetic (md5 hex slice -> int64,
+    counts, shifts), so the signatures are BIT-identical to the
+    expression tier (``simhash_signatures_md5_expr``) and the SQL oracles
+    — pinned by tests/test_dedup.py::test_simhash_signatures_np_matches_expr.
+    """
 
     def sign(batches):
         import hashlib
@@ -1270,8 +1168,8 @@ def simhash_signatures_md5_expr(df: DataFrame, text_col: str = "text",
     integers.  60 signature bits instead of 64 — four bits of resolution
     traded for an exact SQL mirror.  Row-local (zero shuffles); the 60
     per-bit HOF filters are the cost the numpy kernel removes.
-    Zero-token docs are dropped (they have no signature; the xxhash64
-    tier keeps them at sig=0, which the SQL mirror cannot express).
+    Zero-token docs are dropped: they have no signature, and a sig=0
+    placeholder would pair all empty docs with each other.
     """
     token_hashes = F.transform(
         F.filter(F.split(text_col, " "), lambda t: F.length(t) > 0),
@@ -1283,7 +1181,12 @@ def simhash_signatures_md5_expr(df: DataFrame, text_col: str = "text",
         F.col(id_col).alias("doc_id"), token_hashes.alias("ths")
     ).filter(F.size("ths") > 0)
 
+    # Two-select formulation: independent vote columns, then pack.  One
+    # fused per-bit expression measured 2x slower (the giant tree falls
+    # out of whole-stage codegen).
     def _bit_set(i: int):
+        # factory so the single-arg lambda closes over i (a default arg
+        # would make PySpark treat it as an (element, index) lambda)
         return lambda h: F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1
 
     vote_cols = []
@@ -1303,18 +1206,17 @@ def simhash_signatures_md5_expr(df: DataFrame, text_col: str = "text",
 
 def simhash_near_pairs(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", max_hamming: int = 3,
-                       checkable: bool = False,
                        max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance, banded for scale.
 
-    Splits the signature into 4 chunks (16 bits each for the 64-bit
-    xxhash64 tier, 15 for the 60-bit md5 ``checkable`` tier); any pair
-    within hamming distance 3 must agree on >= 1 chunk (pigeonhole), so
-    candidate generation is ONE equi-join on (chunk_id, chunk value) over
-    the exploded chunk rows instead of an all-pairs scan.
+    Splits the 60-bit md5 signature (``simhash_signatures_md5``) into 4
+    chunks of 15 bits; any pair within hamming distance 3 must agree on
+    >= 1 chunk (pigeonhole), so candidate generation is ONE equi-join on
+    (chunk_id, chunk value) over the exploded chunk rows instead of an
+    all-pairs scan.
 
     ``max_bucket`` is the hamming-band twin of ``LSH_MAX_BUCKET`` (r9
-    verdict task 7): the chunk space is only 15-16 bits, so a hub chunk
+    verdict task 7): the chunk space is only 15 bits, so a hub chunk
     value — near-constant per-bit votes on templated/low-entropy corpora
     — collects Θ(n) docs and turns the chunk self-join Θ(n²), the exact
     failure mode measured on the MinHash band join in r9 (the 20-word
@@ -1329,12 +1231,8 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
     # capped path: the bucket-collapse expansion consumes the signatures
     # ONCE, so no persist barrier is needed (the r13 shape below); the
     # uncapped self-join fallback consumes them twice and persists.
-    if checkable:
-        sig = simhash_signatures_md5(df, text_col, id_col)
-        chunk_bits, n_chunks = 15, 4
-    else:
-        sig = simhash_signatures(df, text_col, id_col)
-        chunk_bits, n_chunks = 16, 4
+    sig = simhash_signatures_md5(spread_input(df), text_col, id_col)
+    chunk_bits, n_chunks = 15, 4
     if not max_bucket:
         sig = tracked_persist(sig)
     mask = (1 << chunk_bits) - 1
@@ -1410,17 +1308,14 @@ def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming chain is fully deterministic, so md5-derived token hashes give
     the whole pipeline an exact DuckDB oracle (previously rows-only).
     """
-    d = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    return simhash_near_pairs(d, checkable=True)
+    return simhash_near_pairs(table(spark, sf_dir, "documents"))
 
 
 def _simhash_oracle(bits: int = SIMHASH_MD5_BITS, chunk_bits: int = 15,
                     max_hamming: int = 3,
                     source: str = "SELECT doc_id, text FROM documents",
                     max_bucket: int = LSH_MAX_BUCKET) -> str:
-    """Exact SQL mirror of ``simhash_near_pairs(checkable=True)``: md5
+    """Exact SQL mirror of ``simhash_near_pairs``: md5
     token hashes, per-bit vote sums, sign-threshold signature assembly,
     15-bit chunk banding (hub chunks over ``max_bucket`` dropped by the
     identical QUALIFY windowed count, falsy = disabled), hamming
@@ -1703,9 +1598,7 @@ def chunk_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.col("chunk_text").alias("text"),
     )
-    pairs = minhash_lsh_pairs(
-        chunks, shards=spark.sparkContext.defaultParallelism, checkable=True
-    )
+    pairs = minhash_lsh_pairs(chunks)
     return pairs.filter(
         F.expr(f"doc_a div {CHUNK_ID_BASE} != doc_b div {CHUNK_ID_BASE}")
     ).select(
@@ -1913,12 +1806,14 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str,
     the dedup config.  All hashes are md5-derived, so the whole eval —
     sample filter included — carries an exact SQL oracle.
     """
+    # unconditional repartition, not spread_input: the sample joins a
+    # broadcast count aggregate, so the partition probe would run 2 jobs
     d = _eval_doc_sample(
         table(spark, sf_dir, "documents"), eval_max_docs=eval_max_docs
     ).repartition(spark.sparkContext.defaultParallelism)
     sh = tracked_persist(shingle_arrays(d, "text", "doc_id", 3), corpus=True)
     sig = tracked_persist(minhash_signatures_md5(sh, n_hashes))
-    cand = lsh_candidate_pairs(sig, n_hashes, bands, checkable=True)
+    cand = lsh_candidate_pairs(sig, n_hashes, bands)
     truth = _exact_jaccard_pairs(sh, threshold)
 
     # Tag-union + per-pair max, then one global aggregate: a single pair-key
@@ -2024,6 +1919,8 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str,
     per config; fully md5-derived — sample filter included — so the
     whole sweep is oracle-checked.
     """
+    # unconditional repartition, not spread_input: the sample joins a
+    # broadcast count aggregate, so the partition probe would run 2 jobs
     d = _eval_doc_sample(
         table(spark, sf_dir, "documents"), eval_max_docs=eval_max_docs
     ).repartition(spark.sparkContext.defaultParallelism)
@@ -2050,7 +1947,7 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str,
     # run); the unchanged oracle pins the equivalence.
     banded_all = None
     for b in band_grid:
-        bk = banded_keys(sig, n_hashes, b, checkable=True).select(
+        bk = banded_keys(sig, n_hashes, b).select(
             F.lit(b).alias("bands"), "band", "band_hash", "doc_id"
         )
         banded_all = bk if banded_all is None else banded_all.unionByName(bk)
@@ -2201,9 +2098,7 @@ def corpus_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "source", "is_exact")
     )
-    pairs = minhash_lsh_pairs(
-        d, shards=spark.sparkContext.defaultParallelism, checkable=True
-    ).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(d).select("doc_a", "doc_b")
     near_member = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))

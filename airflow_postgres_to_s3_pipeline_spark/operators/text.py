@@ -1168,11 +1168,13 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: per-doc fingerprint count + order-insensitive XOR checksum
     (int64-exact, unlike a float sum).
     """
-    # local parquet is 1-3 row groups — spread the per-gram md5 CPU across
-    # all cores (the repo-wide pattern for heavy row-local map stages)
-    d = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
+    # function-local: dedup imports this module's SQL constants
+    from airflow_postgres_to_s3_pipeline_spark.operators.dedup import (
+        spread_input,
     )
+
+    # spread the per-gram md5 CPU of a one-file corpus across all cores
+    d = spread_input(table(spark, sf_dir, "documents"))
     return winnow_selected(d).select(
             "doc_id",
             F.size("sel").cast("bigint").alias("n_fp"),
@@ -1245,11 +1247,10 @@ def winnowing_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # function-local: dedup imports this module's SQL constants
     from airflow_postgres_to_s3_pipeline_spark.operators.dedup import (
         _array_pairs,
+        spread_input,
     )
 
-    d = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread_input(table(spark, sf_dir, "documents"))
     # One materialization barrier, mandatory (the repo-wide
     # unmaterialized-HOF trap): the selected-fingerprint ARRAY must
     # persist BEFORE exploding — with it unmaterialized the whole query

@@ -3,6 +3,8 @@ near-dups, but planting makes recall assertions deterministic)."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from airflow_postgres_to_s3_pipeline_spark.operators import dedup
@@ -22,17 +24,25 @@ OTHER = (
 
 
 def _docs(spark):
+    # 5 (NULL text) and 6 (empty text) have no shingles and no tokens:
+    # they must never pair, in MinHash or SimHash, capped or uncapped
     return spark.createDataFrame(
-        [(1, BASE), (2, BASE), (3, NEAR), (4, OTHER)], ["doc_id", "text"]
+        [(1, BASE), (2, BASE), (3, NEAR), (4, OTHER), (5, None), (6, "")],
+        "doc_id long, text string",
     )
 
 
 def test_minhash_lsh_finds_planted_pairs(spark):
-    pairs = dedup.minhash_lsh_pairs(_docs(spark), threshold=0.5)
-    got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-    assert (1, 2) in got  # exact dup: jaccard 1.0, must always collide
+    df = _docs(spark)
+    pairs = dedup.minhash_lsh_pairs(df, threshold=0.5)
+    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pairs.collect()}
+    assert got[(1, 2)] == 1.0  # exact dup: jaccard 1.0, must always collide
     assert (1, 3) in got or (2, 3) in got  # near dup
-    assert all(4 not in p for p in got)  # unrelated doc never pairs
+    assert all(d not in p for p in got for d in (4, 5, 6))
+    sig = dedup.minhash_signatures_md5(dedup.shingle_arrays(df))
+    for cap in (dedup.LSH_MAX_BUCKET, 0):
+        cand = dedup.lsh_candidate_pairs(sig, max_bucket=cap).collect()
+        assert all(d not in r for r in cand for d in (5, 6))
 
 
 def test_minhash_exact_dup_jaccard_is_one(spark):
@@ -42,10 +52,10 @@ def test_minhash_exact_dup_jaccard_is_one(spark):
 
 
 def test_minhash_md5_tier_matches_planted_pairs(spark):
-    # the checkable (md5 double-hash) tier must find the same verified
-    # pairs as the xxhash tier on planted dups: verification is exact
-    # Jaccard either way, and both band schemes catch identical/near docs
-    pairs = dedup.minhash_lsh_pairs(_docs(spark), threshold=0.5, checkable=True)
+    # the md5 double-hash tier (the only tier) finds the planted pairs:
+    # verification is exact Jaccard, and the band scheme catches
+    # identical and near docs
+    pairs = dedup.minhash_lsh_pairs(_docs(spark), threshold=0.5)
     got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pairs.collect()}
     assert got[(1, 2)] == 1.0
     assert any(a != b and (a, b) != (1, 2) for (a, b) in got)
@@ -110,17 +120,52 @@ def test_chunk_near_dedup_excludes_same_doc_pairs(spark, sf_dir):
 
 def test_simhash_near_pairs(spark):
     pairs = dedup.simhash_near_pairs(_docs(spark), max_hamming=10)
-    got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-    assert (1, 2) in got
     hamming = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in pairs.collect()}
     assert hamming[(1, 2)] == 0  # identical text -> identical simhash
-    assert all(4 not in p for p in got)
+    assert all(4 not in p for p in hamming)
+    uncapped = dedup.simhash_near_pairs(
+        _docs(spark), max_hamming=64, max_bucket=0
+    ).collect()
+    capped = dedup.simhash_near_pairs(_docs(spark), max_hamming=64).collect()
+    assert all(d not in r for r in uncapped + capped for d in (5, 6))
 
 
 def test_shingle_arrays_row_local(spark):
     sh = dedup.shingle_arrays(spark.createDataFrame([(1, "a b c d")], ["doc_id", "text"]))
     got = sh.collect()[0]["shingles"]
     assert sorted(got) == ["a b c", "b c d"]
+
+
+def _round_robin_exchanges(df):
+    """Distinct round-robin exchanges in df's physical plan; a cached
+    plan prints once per scan of it, with the same plan_id each time."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    ids = re.findall(r"RoundRobinPartitioning\(\d+\).*plan_id=(\d+)", plan)
+    return len(set(ids))
+
+
+def test_spread_input_widens_only_narrow_input(spark):
+    """spread_input repartitions a one-partition frame to
+    defaultParallelism and returns an already-split frame unchanged; the
+    two text-LSH pipelines spread through it, so they add exactly one
+    round-robin exchange over a narrow input and none over a split one."""
+    from airflow_postgres_to_s3_pipeline_spark.cache import release_persisted
+
+    narrow = _docs(spark).coalesce(1)
+    split = _docs(spark).repartition(8)
+    # counted before the partition probe runs split's shuffle (AQE then
+    # prints split's final plan beside its initial one)
+    assert _round_robin_exchanges(narrow) == 0
+    assert _round_robin_exchanges(split) == 1
+    par = spark.sparkContext.defaultParallelism
+    assert dedup.spread_input(narrow).rdd.getNumPartitions() == par
+    assert dedup.spread_input(split) is split
+    try:
+        for pipeline in (dedup.minhash_lsh_pairs, dedup.simhash_near_pairs):
+            assert _round_robin_exchanges(pipeline(narrow)) == 0 + 1
+            assert _round_robin_exchanges(pipeline(split)) == 1 + 0
+    finally:
+        release_persisted()
 
 
 def test_dedup_exact_collapses_copies(spark, sf_dir):
@@ -269,15 +314,11 @@ def test_lsh_bucket_cap_drops_hub_keeps_true_pairs(spark):
     sig = dedup.minhash_signatures_md5(dedup.shingle_arrays(df))
     unc = {
         (r.doc_a, r.doc_b)
-        for r in dedup.lsh_candidate_pairs(
-            sig, checkable=True, max_bucket=0
-        ).collect()
+        for r in dedup.lsh_candidate_pairs(sig, max_bucket=0).collect()
     }
     cap = {
         (r.doc_a, r.doc_b)
-        for r in dedup.lsh_candidate_pairs(
-            sig, checkable=True, max_bucket=10
-        ).collect()
+        for r in dedup.lsh_candidate_pairs(sig, max_bucket=10).collect()
     }
     hub_pairs = {p for p in unc if p[0] < 30 and p[1] < 30}
     assert len(hub_pairs) == 435
@@ -356,13 +397,13 @@ def test_simhash_chunk_cap_drops_hub_keeps_true_pairs(spark):
     unc = {
         (r.doc_a, r.doc_b)
         for r in dedup.simhash_near_pairs(
-            df, max_hamming=10, checkable=True, max_bucket=0
+            df, max_hamming=10, max_bucket=0
         ).collect()
     }
     cap = {
         (r.doc_a, r.doc_b)
         for r in dedup.simhash_near_pairs(
-            df, max_hamming=10, checkable=True, max_bucket=10
+            df, max_hamming=10, max_bucket=10
         ).collect()
     }
     hub_pairs = {p for p in unc if p[0] < 30 and p[1] < 30}
@@ -392,7 +433,7 @@ def test_simhash_binding_cap_matches_oracle(spark, tmp_path):
     got = sorted(
         (r.doc_a, r.doc_b, r.hamming)
         for r in dedup.simhash_near_pairs(
-            df, max_hamming=10, checkable=True, max_bucket=10
+            df, max_hamming=10, max_bucket=10
         ).collect()
     )
     con = duckdb.connect()
@@ -585,13 +626,11 @@ def test_lsh_candidate_pairs_grouped_matches_selfjoin(spark, sf_dir):
     sig = dedup.minhash_signatures_md5(dedup.shingle_arrays(d))
     grouped = {
         (r.doc_a, r.doc_b)
-        for r in dedup.lsh_candidate_pairs(sig, checkable=True).collect()
+        for r in dedup.lsh_candidate_pairs(sig).collect()
     }
     selfjoin = {
         (r.doc_a, r.doc_b)
-        for r in dedup.lsh_candidate_pairs(
-            sig, checkable=True, max_bucket=0
-        ).collect()
+        for r in dedup.lsh_candidate_pairs(sig, max_bucket=0).collect()
     }
     assert grouped == selfjoin
     assert grouped  # non-vacuous: the corpus plants near-dups
@@ -607,7 +646,7 @@ def test_minhash_signatures_np_matches_expr(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     sh = dedup.shingle_arrays(d).persist()
     got = {r["doc_id"]: tuple(r)[1:] for r in
-           dedup._minhash_signatures_md5_np(sh, 8).collect()}
+           dedup.minhash_signatures_md5(sh, 8).collect()}
     want = {r["doc_id"]: tuple(r)[1:] for r in
             dedup.minhash_signatures_md5_expr(sh, 8).collect()}
     sh.unpersist()
@@ -626,7 +665,7 @@ def test_minhash_signatures_np_rejects_empty_arrays(spark):
         "doc_id long, shingles array<string>",
     )
     with pytest.raises(Exception, match="empty shingle array"):
-        dedup._minhash_signatures_md5_np(df, 4).collect()
+        dedup.minhash_signatures_md5(df, 4).collect()
 
 
 def test_simhash_signatures_np_matches_expr(spark, sf_dir):
@@ -637,7 +676,7 @@ def test_simhash_signatures_np_matches_expr(spark, sf_dir):
 
     d = table(spark, sf_dir, "documents")
     got = {r["doc_id"]: r["simhash"]
-           for r in dedup._simhash_signatures_md5_np(d).collect()}
+           for r in dedup.simhash_signatures_md5(d).collect()}
     want = {r["doc_id"]: r["simhash"]
             for r in dedup.simhash_signatures_md5_expr(d).collect()}
     assert got == want
@@ -649,7 +688,7 @@ def test_simhash_signatures_np_drops_zero_token_docs(spark):
         [(1, "alpha beta"), (2, ""), (3, "   "), (4, None)],
         "doc_id long, text string",
     )
-    got = {r["doc_id"] for r in dedup._simhash_signatures_md5_np(df).collect()}
+    got = {r["doc_id"] for r in dedup.simhash_signatures_md5(df).collect()}
     want = {r["doc_id"] for r in dedup.simhash_signatures_md5_expr(df).collect()}
     assert got == want == {1}
 
@@ -663,14 +702,12 @@ def test_simhash_grouped_cand_matches_selfjoin(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     grouped = {
         tuple(r)
-        for r in dedup.simhash_near_pairs(
-            d, checkable=True, max_hamming=10
-        ).collect()
+        for r in dedup.simhash_near_pairs(d, max_hamming=10).collect()
     }
     selfjoin = {
         tuple(r)
         for r in dedup.simhash_near_pairs(
-            d, checkable=True, max_hamming=10, max_bucket=0
+            d, max_hamming=10, max_bucket=0
         ).collect()
     }
     assert grouped == selfjoin

@@ -19,9 +19,7 @@ def test_kept_doc_is_cluster_argmax_quality(spark):
 
     # reconstruct clusters + qualities independently
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    pairs = dedup.minhash_lsh_pairs(
-        d, shards=4, checkable=True
-    ).select("doc_a", "doc_b")
+    pairs = dedup.minhash_lsh_pairs(d).select("doc_a", "doc_b")
     labels = {
         r.doc_id: r.cluster_id
         for r in dedup.connected_components(pairs, d.select("doc_id")).collect()

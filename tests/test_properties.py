@@ -337,9 +337,7 @@ def test_lsh_band_refinement_subset_property(spark, docs):
         for bands in (2, 4, 8, 16):
             pair_sets[bands] = {
                 (r.doc_a, r.doc_b)
-                for r in lsh_candidate_pairs(
-                    sig, 32, bands, checkable=True
-                ).collect()
+                for r in lsh_candidate_pairs(sig, 32, bands).collect()
             }
         assert pair_sets[2] <= pair_sets[4] <= pair_sets[8] <= pair_sets[16]
     finally:
@@ -379,7 +377,7 @@ def test_lsh_bucket_cap_subset_laws(spark, seeds, n_clones, cap):
         return {
             (r.doc_a, r.doc_b)
             for r in dedup.lsh_candidate_pairs(
-                sig, checkable=True, max_bucket=max_bucket
+                sig, max_bucket=max_bucket
             ).collect()
         }
 
@@ -391,14 +389,14 @@ def test_lsh_bucket_cap_subset_laws(spark, seeds, n_clones, cap):
     ver_unc = {
         (r.doc_a, r.doc_b)
         for r in dedup.verify_jaccard(
-            dedup.lsh_candidate_pairs(sig, checkable=True, max_bucket=0),
+            dedup.lsh_candidate_pairs(sig, max_bucket=0),
             sh, 0.6,
         ).collect()
     }
     ver_cap = {
         (r.doc_a, r.doc_b)
         for r in dedup.verify_jaccard(
-            dedup.lsh_candidate_pairs(sig, checkable=True, max_bucket=cap),
+            dedup.lsh_candidate_pairs(sig, max_bucket=cap),
             sh, 0.6,
         ).collect()
     }
