@@ -222,14 +222,15 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str,
     (``embedding_lsh_near_dup``, ``knn_ivf``) has an exact reference to be
     verified against.  Exclude it from any 100 TB claim.
 
-    The streamed side is repartitioned so the O(n^2) pair loop spreads over
-    every core — a single-file corpus otherwise runs the nested-loop join in
-    ONE task (measured 10x: 52s -> 5s at sf0.1 on local[32]).
+    The streamed side is widened (``spread_input``) so the O(n^2) pair
+    loop spreads over every core — a single-file corpus otherwise runs the
+    nested-loop join in ONE task (measured 10x: 52s -> 5s at sf0.1 on
+    local[32]).
     """
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", to_double_array("embedding").alias("v")
     )
-    a = e.repartition(spark.sparkContext.defaultParallelism).select(
+    a = spread_input(e).select(
         F.col("vec_id").alias("id_a"), F.col("v").alias("va")
     )
     b = e.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
@@ -316,7 +317,7 @@ def ivf_probe_fold(q: DataFrame, centroids: DataFrame,
     fold was O(n x cells x dim) = n^1.5 with the sqrt stride (the r12
     verdict's one weak item).
 
-    Bit-identical to the join+window probe in :func:`knn_ivf`: sims use
+    Bit-identical to the join+window probe :func:`_probe_cells`: sims use
     the same ``try_divide(dot, l2(q) * l2(cv))`` fp64 grouping as
     ``cosine_similarity``; ranking sorts ``struct(-sim, centroid_id)``
     ascending == ``sim DESC, centroid_id ASC``; a NULL sim (zero-norm
@@ -409,7 +410,6 @@ def _adaptive_every(n: int, floor: int = IVF_EVERY) -> int:
 
 def knn_ivf(spark: SparkSession, sf_dir: str, n_probe: int = IVF_N_PROBE,
             every: int | None = None,
-            assign_tier: str = "gemm",
             probe_tier: str = "join") -> DataFrame:
     """Approximate top-5 neighbors via IVF: probe the n_probe nearest
     centroid cells per query instead of the whole corpus.  Recall is
@@ -428,18 +428,14 @@ def knn_ivf(spark: SparkSession, sf_dir: str, n_probe: int = IVF_N_PROBE,
     (measured: >10 min, unusable) vs ~350M at the classic sqrt balance
     (every ~ sqrt(n), n_cells ~ sqrt(n)).  The build amortizes over every
     future query; the per-query probe is what a serving path pays.
-    The index build DEFAULTS to the numpy cogroup GEMM tier
-    (``ivf_assign_gemm`` — the plan you'd ship at 100x corpus size);
-    ``assign_tier="fold"`` keeps the shuffle-free HOF reference semantics
-    (bit-identical assignment, measured 20x slower at 500k vectors) but
-    is NOT scale-safe for the build: with the sqrt stride its cost is
-    O(n x sqrt(n) x dim) — use it only for small-scale equivalence
-    checks.  ``probe_tier`` picks how each query finds its n_probe
-    cells: ``"join"`` (default) broadcast-joins queries x centroids and
-    ranks with a window; ``"fold"`` runs the row-local packed-centroid
-    fold (:func:`ivf_probe_fold`) — bit-identical output, zero shuffle,
-    and O(queries x cells) cost, the kernel a serving path runs per
-    incoming query.
+    The index build is the numpy cogroup GEMM tier (``ivf_assign_gemm``
+    — the plan you'd ship at 100x corpus size).  ``probe_tier`` picks
+    how each query finds its n_probe cells: ``"join"`` (default) is the
+    shared coarse probe :func:`_probe_cells` (broadcast join of queries
+    x centroids, ranked with a window); ``"fold"`` runs the row-local
+    packed-centroid fold (:func:`ivf_probe_fold`) — bit-identical
+    output, zero shuffle, and O(queries x cells) cost, the kernel a
+    serving path runs per incoming query.
     """
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", to_double_array("embedding").alias("v")
@@ -457,33 +453,15 @@ def knn_ivf(spark: SparkSession, sf_dir: str, n_probe: int = IVF_N_PROBE,
         # the floor keeps every=50 — bit-identical to the old default.
         every = _adaptive_every(n_vecs)
     cents = _centroids(e, every)
-    if assign_tier == "gemm":
-        assigned = ivf_assign_gemm(
-            e, cents, _gemm_shards(spark, n_vecs)
-        )
-    else:
-        assigned = ivf_assign(e, cents)
-
-    q = assigned.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    assigned = ivf_assign_gemm(e, cents, _gemm_shards(spark, n_vecs))
     if probe_tier == "fold":
+        q = e.filter(F.col("vec_id") < N_QUERIES).select(
+            F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+        )
         probe = ivf_probe_fold(q, cents, n_probe)
     else:
-        wq = Window.partitionBy("query_id").orderBy(
-            F.col("qcsim").desc(), F.col("centroid_id").asc()
-        )
-        probe = (
-            q.join(F.broadcast(cents))
-            .select(
-                "query_id",
-                "qv",
-                "centroid_id",
-                cosine_similarity(F.col("qv"), F.col("cv")).alias("qcsim"),
-            )
-            .withColumn("prnk", F.row_number().over(wq))
-            .filter(F.col("prnk") <= n_probe)
-            .select("query_id", "qv", "centroid_id")
+        probe = _probe_cells(e, cents, n_probe).select(
+            "query_id", "qv", "centroid_id"
         )
     cand = probe.join(assigned, "centroid_id").filter(
         F.col("vec_id") != F.col("query_id")
@@ -567,18 +545,7 @@ def knn_ivf_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``knn_ivf`` with the PER-QUERY fold kernel: the probe step runs
     the row-local packed-centroid HOF fold (:func:`ivf_probe_fold`) —
     shuffle-free, O(queries x cells x dim) — while the one-off index
-    build stays on the vectorized GEMM tier regardless.
-
-    Until r12 this tier put the fold on the corpus-wide index build
-    (``ivf_assign``), which with the sqrt stride costs O(n^1.5)
-    interpreted lambda steps — 16.7x wall at the 10x-data probe, the
-    r12 verdict's one weak item.  The fold's legitimate demonstration is
-    the per-query path (a serving node folds ONE query against the
-    broadcast centroid table; it never re-assigns the corpus), so the
-    fold now lives there: bounded by the query set, bit-identical
-    output, same exact oracle.  ``ivf_assign`` (the corpus fold) keeps
-    small-scale bit-identity evidence in pytest
-    (tests/test_similarity.py::test_knn_ivf_tiers_bit_identical)."""
+    build stays on the vectorized GEMM tier."""
     return knn_ivf(spark, sf_dir, probe_tier="fold")
 
 
@@ -1143,8 +1110,7 @@ def _embedding_incremental_oracle(max_bucket: int = LSH_MAX_BUCKET) -> str:
 _oracle("embedding_incremental_dedup", _embedding_incremental_oracle())
 
 
-def kmeans_assign(e: DataFrame, centroids: DataFrame,
-                  spread: bool = True) -> DataFrame:
+def kmeans_assign(e: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign each vector to the nearest centroid by squared L2.
 
     The centroid set is packed into ONE broadcast row (sorted struct
@@ -1161,10 +1127,11 @@ def kmeans_assign(e: DataFrame, centroids: DataFrame,
     struct lands in its own projection (withColumn) so CollapseProject
     cannot inline the fold once per consumed field.
 
-    ``spread=False`` is for iterative callers (the Lloyd loop) that widen
-    the corpus frame ONCE up front: the in-call ``spread_input`` probe forces
-    full physical planning through an RDD conversion and, on a narrow
-    scan, a full repartition shuffle — per iteration (ADVICE r9).
+    The kernel never repartitions ``e``: callers widen a narrow scan
+    themselves (``spread_input``), once — the Lloyd loop before its
+    iterations, since an in-call probe would force full physical planning
+    through an RDD conversion and, on a narrow scan, a repartition
+    shuffle per iteration (ADVICE r9).
     """
     packed = centroids.groupBy().agg(
         F.sort_array(F.collect_list(F.struct("cluster_id", "cv"))).alias("_cs")
@@ -1194,9 +1161,8 @@ def kmeans_assign(e: DataFrame, centroids: DataFrame,
             ),
         ),
     )
-    wide = spread_input(e) if spread else e
     return (
-        wide.crossJoin(F.broadcast(packed))
+        e.crossJoin(F.broadcast(packed))
         .withColumn("_best", best)
         .select(
             "vec_id",
@@ -1310,19 +1276,19 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str, k: int = 8,
         "vec_id", to_double_array("embedding").alias("v")
     )
     # Widen + persist ONCE before the loop (ADVICE r9): every iteration
-    # re-scans the corpus frame for its assignment fold, and the old
-    # in-call spread_input re-paid both the getNumPartitions probe (full
-    # physical planning through an RDD conversion) and a full repartition
-    # shuffle of the narrow scan — per iteration.  corpus=True: the frame
-    # carries the full vectors, so its level honours
-    # SPARK_GRAFT_PERSIST_LEVEL (DISK_ONLY at 100 TB; see cache.py).
+    # re-scans the corpus frame for its assignment fold, so a spread
+    # probe per iteration would re-pay the getNumPartitions probe (full
+    # physical planning through an RDD conversion) and a repartition
+    # shuffle of the narrow scan.  corpus=True: the frame carries the
+    # full vectors, so its level honours SPARK_GRAFT_PERSIST_LEVEL
+    # (DISK_ONLY at 100 TB; see cache.py).
     e = tracked_persist(spread_input(e), corpus=True)
     centroids = e.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cluster_id"), F.col("v").alias("cv")
     )
     assigned = None
     for _ in range(iterations):
-        assigned = kmeans_assign(e, centroids, spread=False)
+        assigned = kmeans_assign(e, centroids)
         centroids = kmeans_update(assigned)
     return assigned.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_vectors"),
@@ -1469,7 +1435,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str,
             tile_elems=tile_elems,
         )
     else:
-        assign_df = kmeans_assign(e, centroids)
+        assign_df = kmeans_assign(spread_input(e), centroids)
     assigned = tracked_persist(
         assign_df.select("vec_id", "v", "cluster_id"),
         corpus=True,
@@ -1888,12 +1854,12 @@ PQ_EVERY = 7   # codebook stride: sub-centroid c = slices of vector c*7
                # ~0.56 but cost a 16-subspace unrolled-CTE oracle)
 
 
-def _pq_d2(a, b, subd: int = PQ_SUBD):
+def _pq_d2(a, b):
     """Squared L2 over a sub-vector as a SEQUENTIAL fp64 fold — the same
     left-to-right grouping DuckDB's list_reduce uses, so both engines get
     bit-identical distances."""
     return F.aggregate(
-        F.sequence(F.lit(1), F.lit(subd)),
+        F.sequence(F.lit(1), F.lit(PQ_SUBD)),
         F.lit(0.0),
         lambda acc, i: acc
         + (F.element_at(a, i.cast("int")) - F.element_at(b, i.cast("int")))
@@ -1902,12 +1868,13 @@ def _pq_d2(a, b, subd: int = PQ_SUBD):
 
 
 
-def _pq_codebook(e: DataFrame, ksub: int = PQ_KSUB, every: int = PQ_EVERY):
+def _pq_codebook(e: DataFrame):
     """1-row packed sub-codebook frame (broadcastable, ~32 KB)."""
     cents = e.filter(
-        (F.col("vec_id") % every == 0) & (F.col("vec_id") / every < ksub)
+        (F.col("vec_id") % PQ_EVERY == 0)
+        & (F.col("vec_id") / PQ_EVERY < PQ_KSUB)
     ).select(
-        (F.col("vec_id") / every).cast("long").alias("code"),
+        (F.col("vec_id") / PQ_EVERY).cast("long").alias("code"),
         F.col("v").alias("cv"),
     )
     return cents.groupBy().agg(
@@ -1925,55 +1892,55 @@ def _pq_codebook_nested(packed: DataFrame) -> DataFrame:
     return packed.select(_pq_cb_col().alias("_cb"))
 
 
-def _pq_cb_col(m: int = PQ_M, subd: int = PQ_SUBD):
+def _pq_cb_col():
     """_cb[s+1][c+1] = sub-centroid slice, from the packed ``_cs``."""
     return F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
+        F.sequence(F.lit(0), F.lit(PQ_M - 1)),
         lambda s: F.transform(
-            F.col("_cs"), lambda c: F.slice(c["cv"], s * subd + 1, subd)
+            F.col("_cs"), lambda c: F.slice(c["cv"], s * PQ_SUBD + 1, PQ_SUBD)
         ),
     )
 
 
-def _pq_codes_col(m: int = PQ_M, subd: int = PQ_SUBD):
+def _pq_codes_col():
     """Per-row code list: argmin sub-centroid per subspace (first position
     of the min -> lowest code on exact ties, the oracle's tie rule)."""
     def dists(s):
         return F.transform(
             F.element_at(F.col("_cb"), (s + 1).cast("int")),
-            lambda cc: _pq_d2(F.slice(F.col("v"), s * subd + 1, subd), cc,
-                              subd),
+            lambda cc: _pq_d2(
+                F.slice(F.col("v"), s * PQ_SUBD + 1, PQ_SUBD), cc
+            ),
         )
 
     # two-level transform: the inner one MATERIALIZES each subspace's
     # dists array as a value, so the outer lambda's two references (min +
     # position) read the bound element instead of re-evaluating the
-    # O(ksub x subd) distance transform — halves the dominant step count
-    # of the fold encode tier (r9 review; same fix class as ivf_assign's
-    # own-projection sims barrier)
+    # O(ksub x subd) distance transform — halves this reference encode's
+    # dominant step count (same fix class as ivf_assign's own-projection
+    # sims barrier)
     return F.transform(
-        F.transform(F.sequence(F.lit(0), F.lit(m - 1)), dists),
+        F.transform(F.sequence(F.lit(0), F.lit(PQ_M - 1)), dists),
         lambda ds: (F.array_position(ds, F.array_min(ds)) - 1).cast("long"),
     )
 
 
-def _pq_adist_col(m: int = PQ_M, subd: int = PQ_SUBD):
+def _pq_adist_col():
     """Asymmetric distance: sum over subspaces of d2(query sub-slice,
     coded sub-centroid) as a sequential fold (rounded to 4 for the
     deterministic rank key, the knn convention)."""
     return F.round(
         F.aggregate(
-            F.sequence(F.lit(0), F.lit(m - 1)),
+            F.sequence(F.lit(0), F.lit(PQ_M - 1)),
             F.lit(0.0),
             lambda acc, s: acc
             + _pq_d2(
-                F.slice(F.col("qv"), s * subd + 1, subd),
+                F.slice(F.col("qv"), s * PQ_SUBD + 1, PQ_SUBD),
                 F.element_at(
                     F.element_at(F.col("_cb"), (s + 1).cast("int")),
                     (F.element_at(F.col("codes"), (s + 1).cast("int")) + 1)
                     .cast("int"),
                 ),
-                subd,
             ),
         ),
         4,
@@ -1981,7 +1948,6 @@ def _pq_adist_col(m: int = PQ_M, subd: int = PQ_SUBD):
 
 
 def knn_pq(spark: SparkSession, sf_dir: str,
-           encode_tier: str = "gemm",
            score_tier: str = "gemm") -> DataFrame:
     """Approximate top-5 neighbors by squared-L2 over PQ codes: each
     corpus vector is encoded as ``PQ_M`` sub-codebook indices (argmin
@@ -2002,13 +1968,11 @@ def knn_pq(spark: SparkSession, sf_dir: str,
     row-local; candidate scoring re-reads only (codes, id) — the fp64
     vectors never shuffle.
 
-    The corpus encode DEFAULTS to the numpy cogroup GEMM tier
-    (``pq_encode_gemm`` — measured 661.7s HOF vs 4.2s GEMM at 200k
-    vectors, 156x: the n x m x ksub x subd fold lambdas are
-    CodegenFallback, the knn_ivf r4 lesson again); ``encode_tier="fold"``
-    keeps the shuffle-free HOF reference semantics (bit-identical codes,
-    same oracle) for small-scale equivalence checks only — it is an
-    O(n x m x ksub x subd) interpreted index build, not a serving path.
+    The corpus encode is the numpy cogroup GEMM tier (``pq_encode_gemm``
+    — measured 661.7s HOF vs 4.2s GEMM at 200k vectors, 156x: the
+    n x m x ksub x subd fold lambdas are CodegenFallback, the knn_ivf r4
+    lesson again); the HOF encode ``_pq_codes_col`` stays only as the
+    reference the GEMM codes are tested against.
 
     Scoring DEFAULTS to the numpy LUT tier (``pq_score_gemm``): each
     query's 16x64 lookup table is built once per Arrow batch and
@@ -2029,14 +1993,7 @@ def knn_pq(spark: SparkSession, sf_dir: str,
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    if encode_tier == "gemm":
-        codes = pq_encode_gemm(e, packed, shards)
-    else:
-        codes = (
-            e.repartition(shards)
-            .crossJoin(F.broadcast(_pq_codebook_nested(packed)))
-            .select("vec_id", _pq_codes_col().alias("codes"))
-        )
+    codes = pq_encode_gemm(e, packed, shards)
     w = Window.partitionBy("query_id").orderBy(
         F.col("adist").asc(), F.col("neighbor_id").asc()
     )
@@ -2174,7 +2131,6 @@ def _probe_cells(e: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
 def knn_ivfpq(spark: SparkSession, sf_dir: str,
               n_probe: int = IVFPQ_N_PROBE,
               every: int = IVFPQ_EVERY,
-              score_tier: str = "gemm",
               top: int = TOP_K,
               index: tuple | None = None) -> DataFrame:
     """IVF-PQ: the coarse IVF index (``knn_ivf``'s cosine cells) prunes
@@ -2216,67 +2172,38 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str,
     w = Window.partitionBy("query_id").orderBy(
         F.col("adist").asc(), F.col("neighbor_id").asc()
     )
-    if score_tier == "gemm":
-        pairs = pq_score_cells(coded, probe, packed)
-    else:
-        cand = (
-            probe.join(
-                coded.crossJoin(
-                    F.broadcast(_pq_codebook_nested(packed))
-                ),
-                "centroid_id",
-            ).filter(F.col("vec_id") != F.col("query_id"))
-        )
-        pairs = cand.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _pq_adist_col().alias("adist"),
-        )
     return (
-        pairs.withColumn("rnk", F.row_number().over(w))
+        pq_score_cells(coded, probe, packed)
+        .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= top)
     )
 
 
 def pq_score_cells(coded: DataFrame, probe: DataFrame, packed: DataFrame,
-                   m: int = PQ_M, subd: int = PQ_SUBD,
                    with_cell: bool = False) -> DataFrame:
     """Cell-local ADC scoring for IVF-PQ: codes and probing queries
     cogroup on ``centroid_id``, so each Arrow batch scores exactly one
     cell's candidates against exactly the queries that probed it — the
     IVF pruning IS the cogroup key, no per-pair join row ever
     materializes in Catalyst.  Same numpy LUT arithmetic as
-    ``pq_score_gemm`` (``_adc_scores`` — bit-identical to the HOF fold
+    ``pq_score_gemm`` (``_adc_batches`` — bit-identical to the HOF fold
     and the shared oracle)."""
     probe_cb = probe.crossJoin(F.broadcast(_pq_codebook_flat(packed)))
 
     def score(codes_pdf, q_pdf):
-        import numpy as np
         import pandas as pd
 
-        C = np.asarray(
-            q_pdf.iloc[0]["_cbflat"], dtype=np.float64
-        ).reshape(-1, m * subd)
-        codes_mat = np.stack(codes_pdf["codes"].to_numpy()).astype(np.int64)
-        vec_ids = codes_pdf["vec_id"].to_numpy()
-        out = []
-        for _, qrow in q_pdf.drop_duplicates("query_id").iterrows():
-            qid = qrow["query_id"]
-            adist = _adc_scores(C, codes_mat, qrow["qv"], m, subd)
-            keep = vec_ids != qid
-            # raw adist out of the worker; rounding happens in Spark
-            # below (HALF_UP, the module rule) — np.round is banker's
-            # and can flip the rank key vs the fold tier/oracles at a
-            # .00005 boundary
-            cols = {"query_id": qid,
-                    "neighbor_id": vec_ids[keep],
-                    "adist": adist[keep]}
-            if with_cell:
-                # the cogroup key — constant per call, carried so probe
-                # sweeps can attach per-config prnk without a corpus join
-                cols["centroid_id"] = int(codes_pdf["centroid_id"].iloc[0])
-            out.append(pd.DataFrame(cols))
-        return pd.concat(out, ignore_index=True)
+        cell = {}
+        if with_cell:
+            # the cogroup key — constant per call, carried so probe
+            # sweeps can attach per-config prnk without a corpus join
+            cell["centroid_id"] = int(codes_pdf["centroid_id"].iloc[0])
+        return pd.concat(
+            [pd.DataFrame({"query_id": qid, "neighbor_id": nid,
+                           "adist": adist, **cell})
+             for qid, nid, adist in _adc_batches(codes_pdf, q_pdf)],
+            ignore_index=True,
+        )
 
     schema = "query_id long, neighbor_id long, adist double"
     if with_cell:
@@ -2468,7 +2395,6 @@ _oracle("knn_ivfpq_refine", _knn_ivfpq_refine_oracle())
 
 
 def pq_encode_gemm(e: DataFrame, packed: DataFrame, n_shards: int,
-                   m: int = PQ_M, subd: int = PQ_SUBD,
                    carry: tuple = ()) -> DataFrame:
     """``_pq_codes_col`` at GEMM speed: the corpus is salted into shards
     and cogrouped with the engine-replicated flat codebook (the
@@ -2496,11 +2422,11 @@ def pq_encode_gemm(e: DataFrame, packed: DataFrame, n_shards: int,
 
         C = np.asarray(
             cb_pdf.iloc[0]["_cbflat"], dtype=np.float64
-        ).reshape(-1, m * subd)
+        ).reshape(-1, PQ_M * PQ_SUBD)
         A = np.stack(corpus_pdf["v"].to_numpy()).astype(np.float64)
-        codes = np.zeros((A.shape[0], m), dtype=np.int64)
-        for s in range(m):
-            sub = slice(s * subd, (s + 1) * subd)
+        codes = np.zeros((A.shape[0], PQ_M), dtype=np.int64)
+        for s in range(PQ_M):
+            sub = slice(s * PQ_SUBD, (s + 1) * PQ_SUBD)
             codes[:, s] = np_sq_l2(A[:, sub], C[:, sub]).argmin(axis=1)
         return pd.DataFrame(
             {"vec_id": corpus_pdf["vec_id"].to_numpy(),
@@ -2522,23 +2448,10 @@ def knn_pq_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``knn_pq`` with the PER-QUERY fold kernel: candidate scoring runs
     the all-Catalyst asymmetric-distance fold (``score_tier="fold"``,
     the sum-over-subspaces sequential fp64 fold the oracle mirrors),
-    while the one-off corpus encode stays on the vectorized GEMM tier
-    regardless.
-
-    Until r12 this tier also put the fold on the corpus ENCODE — an
-    O(n x m x ksub x subd) interpreted index build (156x slower than
-    GEMM at 200k vectors; with scoring it made the tier 9.3x wall at
-    the 10x-data probe, half of the r12 verdict's weak pair).  The
-    fold's legitimate demonstration is the per-query scoring path
-    (ADC: each query folds over candidates' codes — the cost a serving
-    node pays), so the fold now lives there: measured at the 20k-vector
-    sf1 derivative, fold-encode+fold-score 54.3s vs GEMM-encode+
-    fold-score 12.7s, within noise of the full-GEMM 13.2s.  Bit-identical
-    output, same exact oracle; the fold ENCODE keeps small-scale
-    bit-identity evidence in pytest
-    (tests/test_similarity.py::test_knn_pq_fold_bit_identical_to_gemm_tier).
+    while the one-off corpus encode stays on the vectorized GEMM tier.
+    Bit-identical output, same exact oracle.
     """
-    return knn_pq(spark, sf_dir, encode_tier="gemm", score_tier="fold")
+    return knn_pq(spark, sf_dir, score_tier="fold")
 
 
 ORACLES["knn_pq_fold"] = ORACLES["knn_pq"]
@@ -2560,7 +2473,7 @@ def _pq_codebook_flat(packed: DataFrame) -> DataFrame:
     )
 
 
-def _adc_scores(C, codes, qv, m: int, subd: int):
+def _adc_scores(C, codes, qv):
     """Asymmetric distances of one query ``qv`` to every code row of
     ``codes`` (n x m) over the flat codebook ``C`` (ksub x m*subd): per
     subspace s, the LUT ``np_sq_l2(q_s, C_s)`` over the ksub
@@ -2571,15 +2484,35 @@ def _adc_scores(C, codes, qv, m: int, subd: int):
 
     qv = np.asarray(qv, dtype=np.float64)
     adist = np.zeros(codes.shape[0])
-    for s in range(m):
-        sub = slice(s * subd, (s + 1) * subd)
+    for s in range(PQ_M):
+        sub = slice(s * PQ_SUBD, (s + 1) * PQ_SUBD)
         adist += np_sq_l2(qv[None, sub], C[:, sub])[0][codes[:, s]]
     return adist
 
 
+def _adc_batches(codes_pdf, q_pdf):
+    """The ADC batch loop both numpy scorers share: decode the flat
+    codebook the query rows carry (``_cbflat``), stack the batch's code
+    matrix once, and yield ``(query_id, neighbor_ids, adist)`` per
+    distinct query with the query itself excluded.  adist is RAW: the
+    callers round in Spark (HALF_UP, the module rule) — np.round is
+    banker's and can flip the rank key vs the fold tier/oracles at a
+    .00005 boundary."""
+    import numpy as np
+
+    C = np.asarray(
+        q_pdf.iloc[0]["_cbflat"], dtype=np.float64
+    ).reshape(-1, PQ_M * PQ_SUBD)
+    codes_mat = np.stack(codes_pdf["codes"].to_numpy()).astype(np.int64)
+    vec_ids = codes_pdf["vec_id"].to_numpy()
+    for _, qrow in q_pdf.drop_duplicates("query_id").iterrows():
+        qid = qrow["query_id"]
+        keep = vec_ids != qid
+        yield qid, vec_ids[keep], _adc_scores(C, codes_mat, qrow["qv"])[keep]
+
+
 def pq_score_gemm(codes: DataFrame, q: DataFrame, packed: DataFrame,
-                  n_shards: int, m: int = PQ_M,
-                  subd: int = PQ_SUBD) -> DataFrame:
+                  n_shards: int) -> DataFrame:
     """ADC scoring at GEMM speed: the REAL lookup-table serving path.
     Corpus codes are salted into shards and cogrouped with the
     engine-replicated query set (each query row carries the packed
@@ -2587,7 +2520,7 @@ def pq_score_gemm(codes: DataFrame, q: DataFrame, packed: DataFrame,
     the corpus); each Arrow batch builds the per-query 16x64 LUT in numpy
     with DIMENSION-ORDERED accumulation and scores candidates with m
     table-gathers accumulated IN SUBSPACE ORDER — the same two-level fp64
-    grouping as the HOF fold ``sum_s d2(q_s, cb[s][c_s])`` (``_adc_scores``),
+    grouping as the HOF fold ``sum_s d2(q_s, cb[s][c_s])`` (``_adc_batches``),
     so adist is bit-identical to the interpreted tier and the shared
     oracle.
 
@@ -2603,17 +2536,8 @@ def pq_score_gemm(codes: DataFrame, q: DataFrame, packed: DataFrame,
         import numpy as np
         import pandas as pd
 
-        C = np.asarray(
-            q_pdf.iloc[0]["_cbflat"], dtype=np.float64
-        ).reshape(-1, m * subd)
-        codes_mat = np.stack(codes_pdf["codes"].to_numpy()).astype(np.int64)
-        vec_ids = codes_pdf["vec_id"].to_numpy()
         out = []
-        for _, qrow in q_pdf.drop_duplicates("query_id").iterrows():
-            qid = qrow["query_id"]
-            adist = _adc_scores(C, codes_mat, qrow["qv"], m, subd)
-            keep = vec_ids != qid
-            a, nid = adist[keep], vec_ids[keep]
+        for qid, nid, a in _adc_batches(codes_pdf, q_pdf):
             # per-shard prune (the knn_gemm pattern, r9 review): keep the
             # k smallest raw adists plus every row within 1e-3 of the
             # k-th — rounding to 4 decimals moves a value by <= 5e-5, so
@@ -2625,8 +2549,6 @@ def pq_score_gemm(codes: DataFrame, q: DataFrame, packed: DataFrame,
                 kth = np.partition(a, TOP_K - 1)[TOP_K - 1]
                 sel = a <= kth + 1e-3
                 a, nid = a[sel], nid[sel]
-            # raw adist; HALF_UP rounding applied in Spark below (the
-            # module rule — np.round is banker's)
             out.append(pd.DataFrame(
                 {"query_id": qid,
                  "neighbor_id": nid,
@@ -2898,7 +2820,7 @@ def _exact_l2_topk(spark: SparkSession, sf_dir: str,
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    pairs = e.repartition(spark.sparkContext.defaultParallelism).join(
+    pairs = spread_input(e).join(
         F.broadcast(q), F.col("vec_id") != F.col("query_id")
     )
     w = Window.partitionBy("query_id").orderBy(

@@ -329,58 +329,106 @@ def test_knn_ivfpq_candidates_subset_of_probed_cells(spark, sf_dir):
         )
 
 
-def test_knn_pq_fold_bit_identical_to_gemm_tier(spark, sf_dir):
-    """All three tiers must produce byte-for-byte the same ranked output
-    (dimension-ordered accumulation + first-min argmin are the
-    equivalence contract): the full-GEMM default, the registered
-    knn_pq_fold (GEMM encode + fold scoring), and the corpus-fold
-    ENCODE — which since r13 exists only for this small-scale
-    equivalence check (at scale it is an O(n x m x ksub x subd)
-    interpreted index build; the registered tier builds with GEMM)."""
-    gemm = sorted(map(tuple, similarity.knn_pq(spark, sf_dir).collect()))
-    fold = sorted(map(tuple, similarity.knn_pq_fold(spark, sf_dir).collect()))
-    assert gemm == fold
-    enc_fold = sorted(
-        map(
-            tuple,
-            similarity.knn_pq(
-                spark, sf_dir, encode_tier="fold", score_tier="fold"
-            ).collect(),
-        )
+def _embeddings(spark, sf_dir):
+    return table(spark, sf_dir, "embeddings").select(
+        "vec_id", similarity.to_double_array("embedding").alias("v")
     )
-    assert gemm == enc_fold
+
+
+def _rowset(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_knn_pq_fold_bit_identical_to_gemm_tier(spark, sf_dir):
+    """The GEMM tiers and their HOF fold references must agree byte for
+    byte (dimension-ordered accumulation + first-min argmin are the
+    equivalence contract): the full-GEMM knn_pq equals the registered
+    knn_pq_fold (GEMM encode + fold scoring), and the GEMM corpus encode
+    ``pq_encode_gemm`` equals the fold encode ``_pq_codes_col`` over the
+    whole corpus."""
+    assert _rowset(similarity.knn_pq(spark, sf_dir)) == _rowset(
+        similarity.knn_pq_fold(spark, sf_dir)
+    )
+    e = _embeddings(spark, sf_dir)
+    packed = similarity._pq_codebook(e)
+    gemm_codes = _rowset(similarity.pq_encode_gemm(e, packed, 8))
+    fold_codes = _rowset(
+        e.crossJoin(F.broadcast(similarity._pq_codebook_nested(packed)))
+        .select("vec_id", similarity._pq_codes_col().alias("codes"))
+    )
+    assert gemm_codes == fold_codes
+    assert len(gemm_codes) == e.count()
 
 
 def test_knn_ivf_tiers_bit_identical(spark, sf_dir):
     """The registered knn_ivf_fold (GEMM build + row-local fold probe)
-    and the corpus-fold ASSIGN tier (pytest-only since r13 — its build
-    is O(n^1.5) with the sqrt stride) must both equal the default
-    join+window plan byte for byte."""
-    gemm = sorted(map(tuple, similarity.knn_ivf(spark, sf_dir).collect()))
-    probe_fold = sorted(
-        map(tuple, similarity.knn_ivf_fold(spark, sf_dir).collect())
+    must equal the default join+window probe byte for byte, and the GEMM
+    index build ``ivf_assign_gemm`` must assign every corpus vector to
+    the same cell as the corpus fold ``ivf_assign``."""
+    assert _rowset(similarity.knn_ivf(spark, sf_dir)) == _rowset(
+        similarity.knn_ivf_fold(spark, sf_dir)
     )
-    assert gemm == probe_fold
-    assign_fold = sorted(
-        map(
-            tuple,
-            similarity.knn_ivf(spark, sf_dir, assign_tier="fold").collect(),
-        )
-    )
-    assert gemm == assign_fold
+    e = _embeddings(spark, sf_dir)
+    cents = similarity._centroids(e, similarity.IVF_EVERY)
+    gemm = _rowset(similarity.ivf_assign_gemm(e, cents, 8))
+    assert gemm == _rowset(similarity.ivf_assign(e, cents))
+    assert len(gemm) == e.count()
 
 
 def test_knn_ivfpq_score_tiers_bit_identical(spark, sf_dir):
-    """Cell-cogroup LUT scoring (default) must equal the interpreted
-    fold-scoring path byte for byte."""
-    gemm = sorted(map(tuple, similarity.knn_ivfpq(spark, sf_dir).collect()))
-    fold = sorted(
-        map(
-            tuple,
-            similarity.knn_ivfpq(spark, sf_dir, score_tier="fold").collect(),
+    """Cell-cogroup LUT scoring (``pq_score_cells``) must equal the
+    interpreted ``_pq_adist_col`` fold over the same probe and coded
+    frames byte for byte."""
+    _, e, cents, packed, coded = similarity._ivfpq_index(spark, sf_dir)
+    probe = similarity._probe_cells(
+        e, cents, similarity.IVFPQ_N_PROBE
+    ).select("query_id", "qv", "centroid_id")
+    gemm = _rowset(similarity.pq_score_cells(coded, probe, packed))
+    fold = _rowset(
+        probe.join(
+            coded.crossJoin(
+                F.broadcast(similarity._pq_codebook_nested(packed))
+            ),
+            "centroid_id",
+        )
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            similarity._pq_adist_col().alias("adist"),
         )
     )
-    assert gemm == fold
+    assert gemm and gemm == fold
+
+
+def _executed_node_count(df, node_name: str) -> int:
+    """Nodes named ``node_name`` in ``df``'s executed plan (AQE's final
+    plan, query stages included) — call after an action on ``df``."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.finalPhysicalPlan()
+
+    def count(node):
+        kids = [node.children().apply(i)
+                for i in range(node.children().size())]
+        if "QueryStageExec" in node.getClass().getSimpleName():
+            kids.append(node.plan())
+        return int(node.nodeName() == node_name) + sum(map(count, kids))
+
+    return count(plan)
+
+
+def test_knn_ivf_runs_one_assign_cogroup(spark, sf_dir):
+    """The IVF index build is one GEMM cogroup: the queries and the
+    probe read the embeddings scan, not the assigned corpus, so neither
+    the join probe nor the fold probe runs the assignment a second
+    time."""
+    for fn in (similarity.knn_ivf, similarity.knn_ivf_fold):
+        df = fn(spark, sf_dir)
+        df.collect()
+        assert _executed_node_count(df, "FlatMapCoGroupsInPandas") == 1, (
+            fn.__name__
+        )
 
 
 def test_knn_pq_stable_under_small_arrow_batches(spark, sf_dir):
@@ -595,9 +643,7 @@ def test_pq_score_gemm_handles_empty_corpus_shards(spark, sf_dir):
     branch.  A 3-row corpus over 8 shards guarantees several empty
     shards; every cogroup tier must still return its fold reference's
     rows."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", similarity.to_double_array("embedding").alias("v")
-    )
+    e = _embeddings(spark, sf_dir)
     packed = similarity._pq_codebook(e)
     tiny = e.filter(F.col("vec_id") < 3)
     codes = similarity.pq_encode_gemm(tiny, packed, 2)
@@ -613,24 +659,21 @@ def test_pq_score_gemm_handles_empty_corpus_shards(spark, sf_dir):
 
     # every other cogroup tier over the same 8 mostly-empty shards
     # returns the rows of its fold reference
-    def rowset(df):
-        return sorted(tuple(r) for r in df.collect())
-
     cents = e.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
     )
-    assert rowset(similarity.ivf_assign_gemm(tiny, cents, 8)) == rowset(
+    assert _rowset(similarity.ivf_assign_gemm(tiny, cents, 8)) == _rowset(
         similarity.ivf_assign(tiny, cents)
     )
     clusters = cents.withColumnRenamed("centroid_id", "cluster_id")
-    assert rowset(similarity.kmeans_assign_gemm(tiny, clusters, 8)) == rowset(
+    assert _rowset(similarity.kmeans_assign_gemm(tiny, clusters, 8)) == _rowset(
         similarity.kmeans_assign(tiny, clusters)
     )
     fold_codes = tiny.crossJoin(
         F.broadcast(similarity._pq_codebook_nested(packed))
     ).select("vec_id", similarity._pq_codes_col().alias("codes"))
-    gemm_codes = rowset(similarity.pq_encode_gemm(tiny, packed, 8))
-    assert gemm_codes == rowset(fold_codes) and len(gemm_codes) == 3
+    gemm_codes = _rowset(similarity.pq_encode_gemm(tiny, packed, 8))
+    assert gemm_codes == _rowset(fold_codes) and len(gemm_codes) == 3
 
 
 def test_numpy_twins_bit_identical_to_hof_folds(spark):

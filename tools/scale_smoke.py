@@ -320,8 +320,7 @@ def main() -> int:
         results.append(run_vec(
             "vector_knn_ivf", nv_km,
             lambda d: similarity.knn_ivf(
-                spark, d, every=max(50, int(nv_km ** 0.5)),
-                assign_tier="gemm")))
+                spark, d, every=max(50, int(nv_km ** 0.5)))))
         # r8: the full two-stage serving path (IVF-PQ slate -> exact
         # refine); coarse stride scales ~sqrt(n) per the r4 finding
         results.append(run_vec(
