@@ -452,7 +452,10 @@ def knn_ivf(spark: SparkSession, sf_dir: str, n_probe: int = IVF_N_PROBE,
         # mirror holds at ANY scale factor; at the driver's sf0.001-0.1
         # the floor keeps every=50 — bit-identical to the old default.
         every = _adaptive_every(n_vecs)
-    cents = _centroids(e, every)
+    # two consumers (the assign cogroup and the probe) — persist so the
+    # embeddings scan that derives the centroids runs once, as in
+    # _ivfpq_index
+    cents = tracked_persist(_centroids(e, every))
     assigned = ivf_assign_gemm(e, cents, _gemm_shards(spark, n_vecs))
     if probe_tier == "fold":
         q = e.filter(F.col("vec_id") < N_QUERIES).select(

@@ -401,34 +401,54 @@ def test_knn_ivfpq_score_tiers_bit_identical(spark, sf_dir):
     assert gemm and gemm == fold
 
 
-def _executed_node_count(df, node_name: str) -> int:
-    """Nodes named ``node_name`` in ``df``'s executed plan (AQE's final
-    plan, query stages included) — call after an action on ``df``."""
+def _executed_nodes(df) -> list:
+    """Nodes of ``df``'s executed plan: AQE's final plan, with query
+    stages and each cached relation's plan (once per relation) included —
+    call after an action on ``df``."""
     plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        plan = plan.finalPhysicalPlan()
+    identity = df.sparkSession._jvm.System.identityHashCode
+    seen, nodes = set(), []
 
-    def count(node):
+    def walk(node):
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            node = node.finalPhysicalPlan()
+        nodes.append(node)
         kids = [node.children().apply(i)
                 for i in range(node.children().size())]
-        if "QueryStageExec" in node.getClass().getSimpleName():
+        kind = node.getClass().getSimpleName()
+        if "QueryStageExec" in kind:
             kids.append(node.plan())
-        return int(node.nodeName() == node_name) + sum(map(count, kids))
+        if kind == "InMemoryTableScanExec":
+            cached = node.relation().cacheBuilder()
+            if identity(cached) not in seen:
+                seen.add(identity(cached))
+                kids.append(cached.cachedPlan())
+        for kid in kids:
+            walk(kid)
 
-    return count(plan)
+    walk(plan)
+    return nodes
 
 
 def test_knn_ivf_runs_one_assign_cogroup(spark, sf_dir):
     """The IVF index build is one GEMM cogroup: the queries and the
     probe read the embeddings scan, not the assigned corpus, so neither
     the join probe nor the fold probe runs the assignment a second
-    time."""
+    time.  The centroid frame feeds both the cogroup and the probe, and
+    is persisted so one embeddings scan derives it."""
     for fn in (similarity.knn_ivf, similarity.knn_ivf_fold):
         df = fn(spark, sf_dir)
         df.collect()
-        assert _executed_node_count(df, "FlatMapCoGroupsInPandas") == 1, (
-            fn.__name__
-        )
+        nodes = _executed_nodes(df)
+        cogroups = [n for n in nodes
+                    if n.nodeName() == "FlatMapCoGroupsInPandas"]
+        centroid_scans = [
+            n for n in nodes
+            if n.nodeName().startswith("Scan")
+            and "% 50) = 0)" in n.simpleString(400)
+        ]
+        assert len(cogroups) == 1, fn.__name__
+        assert len(centroid_scans) == 1, fn.__name__
 
 
 def test_knn_pq_stable_under_small_arrow_batches(spark, sf_dir):

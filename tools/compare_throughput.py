@@ -18,15 +18,15 @@ from __future__ import annotations
 import os
 import sys
 import time
+from functools import partial
 
 import duckdb
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from bench import timed_noop, warm_up  # noqa: E402
+from check_oracles import TABLES  # noqa: E402
 
 
 def main() -> int:
@@ -35,7 +35,6 @@ def main() -> int:
 
     from airflow_postgres_to_s3_pipeline_spark.session import get_spark
     from airflow_postgres_to_s3_pipeline_spark import registry
-    from airflow_postgres_to_s3_pipeline_spark.cache import release_persisted
 
     spark = get_spark(app_name="compare")
     spark.sparkContext.setLogLevel("ERROR")
@@ -47,9 +46,7 @@ def main() -> int:
         )
 
     # Warm both engines.
-    registry.QUERIES["pricing_summary"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warm_up(spark, sf_dir)
     con.execute(registry.ORACLES["pricing_summary"]).fetchall()
 
     rows = []
@@ -58,20 +55,9 @@ def main() -> int:
             continue
         if name.startswith("streaming_"):
             continue  # memory-sink materialization isn't comparable
-        t0 = time.time()
-        try:
-            registry.QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            spark_s = time.time() - t0
-        finally:
-            # cache.py's policy: the terminal consumer releases tracked
-            # persists between queries — without this the sweep accumulates
-            # corpus-sized caches across ~150 entries (memory pressure is
-            # exactly the timing skew this tool exists to detect).  Outside
-            # the timed span: the unpersist RPC is bookkeeping, not query.
-            release_persisted()
-            spark.catalog.clearCache()
+        spark_s = timed_noop(
+            spark, partial(registry.QUERIES[name], spark, sf_dir)
+        )
         t0 = time.time()
         con.execute(registry.ORACLES[name]).fetchall()
         duck_s = time.time() - t0
