@@ -73,10 +73,17 @@ def checkpoint(df: DataFrame, metric: Column | None = None) -> tuple[DataFrame, 
     The cut keeps a loop's plan one round deep instead of doubling per
     round, and the convergence or empty-round probe rides the checkpoint
     job as an Observation, so a round costs one driver action, not two.
-    The blocks are local: they live on the executors that computed them
-    and die with them.  On a cluster that loses executors, a reliable
-    ``checkpoint()`` to ``spark.sparkContext.setCheckpointDir`` storage is
-    the drop-in replacement.
+    Further Observations attached to ``df`` (at any depth of its plan,
+    e.g. below a row-splitting explode) are filled by the same action.
+    Under AQE the cut frame reports no output partitioning (the executed
+    plan it is cut from is adaptive and exposes none), so a join keyed
+    on it re-shuffles it: a loop-INVARIANT input that every round joins
+    on its key stays a :func:`tracked_persist`, whose cache scan keeps
+    the plan's partitioning (``bfs_hops``' adjacency).  The blocks are
+    local: they live on the executors that computed them and die with
+    them.  On a cluster that loses executors, a reliable ``checkpoint()``
+    to ``spark.sparkContext.setCheckpointDir`` storage is the drop-in
+    replacement.
     """
     obs = Observation()
     metric = F.count(F.lit(1)) if metric is None else metric

@@ -840,52 +840,69 @@ def bfs_hops(spark: SparkSession, sf_dir: str,
     far is every part from the best-connected hub" is the reachability
     question behind related-item exploration depth and graph QA.
 
-    Source = the globally minimum part id (deterministic, no parameter),
-    read off an Observation on the action that materializes the persisted
-    adjacency, so it costs no job of its own.  Hop 1 is the source's own
-    adjacency rows (a filter, no join, no distinct).  Every later hop is
-    one edge join (frontier-keyed) + a distinct + one anti-join against
-    the previous TWO layers only: the adjacency is symmetric, so a
-    neighbor of layer k lies in layer k-1, k or k+1, and older layers
-    can never reappear.  Each of those layers is cut by
-    ``cache.checkpoint``, whose observed row count detects the empty
-    layer on the same job, so a build costs one adjacency
-    materialization plus about four jobs per hop.  The loop stops early
-    on an empty layer or at ``max_hops`` (bounded so the recursive-CTE
-    oracle can mirror it; nodes beyond max_hops are reported
-    unreachable-within-bound by omission, exactly like the oracle).  An
-    edge-less graph yields the oracle's base row ``(NULL, 0)``.
+    Source = the globally minimum part id (deterministic, no parameter).
+    When the source reaches every vertex, the build costs one adjacency
+    materialization plus one checkpoint per non-empty hop after the first:
 
-    The loop-INVARIANT big side of every hop's join is persisted as a
-    chunked ADJACENCY list, not a flat edge list (r13 second pass): the
-    flat layout made every hop scan |E| cached rows just to probe the
-    (tiny, broadcast) frontier — 2.4M rows per hop at sf0.1, measured as
-    the bulk of the per-hop cost.  Grouping to per-vertex neighbor
-    arrays (one hash(src) exchange at build, replacing the old
-    repartition) shrinks the per-hop probe side to ~|V| rows; the
-    neighbor expansion (explode) runs AFTER the join, so each hop's
-    explode touches only the frontier's own edges — per-hop work is
-    O(|V| scan + |frontier edges|), not O(|E|).  Arrays are split into
-    <= ADJ_CHUNK-element chunks row-locally so hub vertices cannot pin
-    huge rows (see ADJ_CHUNK); the groupBy's hash(src) partitioning
-    survives chunking and the persist, so at scale (frontier too big to
-    broadcast) the shuffle join still moves only the frontier side.
+    - The loop-invariant big side of every hop's join is a chunked
+      ADJACENCY list, persisted and materialized by one noop write.  One
+      Observation on the grouped frame, before ``_chunk_array`` splits
+      it, rides that write and reads |V| (the vertices with at least one
+      edge), the source ``min(src)`` and the source's degree
+      ``min_by(size(nbrs), src)``; read before the split, the degree of
+      a hub source with more than ADJ_CHUNK neighbors counts whole.
+    - Hop 1 is the source's own adjacency rows: a lazy filter, no join,
+      no distinct, no action.
+    - Every later hop is one edge join (frontier-keyed) + a distinct +
+      one anti-join against the previous TWO layers only: the adjacency
+      is symmetric, so a neighbor of layer k lies in layer k-1, k or
+      k+1, and older layers can never reappear.  Each such layer is cut
+      by ``cache.checkpoint``, whose observed row count rides the same
+      job.
+    - The layers are disjoint, so ``reached`` (the source, its degree
+      and every later layer's count) equals |V| exactly when the next
+      layer would be empty: the loop stops there instead of paying a
+      round to learn it.  It also stops on an empty layer (the source
+      cannot reach some vertex) or at ``max_hops`` (bounded so the
+      recursive-CTE oracle can mirror it; nodes beyond max_hops are
+      reported unreachable-within-bound by omission, exactly like the
+      oracle).  An edge-less graph yields the oracle's base row
+      ``(NULL, 0)``.
+
+    Per-vertex neighbor arrays, not a flat edge list, keep the per-hop
+    probe side at ~|V| rows instead of |E| (the flat layout scanned 2.4M
+    rows per hop at sf0.1); the neighbor expansion (explode) runs AFTER
+    the join, so each hop's explode touches only the frontier's own
+    edges — per-hop work is O(|V| scan + |frontier edges|).  Arrays are
+    split into <= ADJ_CHUNK-element chunks row-locally so hub vertices
+    cannot pin huge rows (see ADJ_CHUNK).  The groupBy's hash(src)
+    partitioning survives chunking and the persist, so at scale
+    (frontier too big to broadcast) the shuffle join still moves only
+    the frontier side.  That is why the adjacency is a persist and not a
+    ``cache.checkpoint``: under AQE a checkpoint's frame reports no
+    output partitioning, and every hop would re-shuffle the whole
+    adjacency (see the checkpoint docstring).
 
     Returns (node, hops) for every node reachable within max_hops.
     """
     # fused adjacency build — same one-exchange dedup+collapse as
-    # pagerank_parts (r14); BFS needs no degree column
+    # pagerank_parts (r14); the degree BFS needs is the source's alone,
+    # so it is observed, not carried as a column
+    stats = Observation()
     adj = tracked_persist(
         _basket_pair_edges_sym(spark, sf_dir, max_basket)
         .groupBy(F.col("pa").alias("src"))
         .agg(F.sort_array(F.collect_set("pb")).alias("nbrs"))
+        .observe(
+            stats,
+            F.count(F.lit(1)).alias("n"),
+            F.min("src").alias("s"),
+            F.min_by(F.size("nbrs"), F.col("src")).alias("d"),
+        )
         .select("src", F.explode(_chunk_array("nbrs")).alias("nbrs"))
     )
-    obs = Observation()
-    adj.observe(obs, F.min("src").alias("s")).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    src = obs.get["s"]
+    adj.write.format("noop").mode("overwrite").save()
+    n_vertices, src, degree = (stats.get[k] for k in ("n", "s", "d"))
     source = spark.range(1).select(
         F.lit(src).cast(adj.schema["src"].dataType).alias("node"),
         F.lit(0).cast("int").alias("hops"),
@@ -894,11 +911,14 @@ def bfs_hops(spark: SparkSession, sf_dir: str,
         return source
     # hop 1 (never empty) stays lazy: a point lookup in the cached
     # adjacency, whose per-batch src statistics prune the scan, is cheaper
-    # to repeat than a checkpoint job
+    # to repeat than a checkpoint job; its size is the observed degree
     layers = [source, adj.filter(F.col("src") == F.lit(src)).select(
         F.explode("nbrs").alias("node"), F.lit(1).cast("int").alias("hops")
     )]
+    reached = 1 + degree
     for hop in range(2, max_hops + 1):
+        if reached == n_vertices:
+            break
         layer, n = checkpoint(
             adj.join(layers[-1].select(F.col("node").alias("src")), "src")
             .select(F.explode("nbrs").alias("node"))
@@ -913,6 +933,7 @@ def bfs_hops(spark: SparkSession, sf_dir: str,
         if n == 0:
             break
         layers.append(layer)
+        reached += n
     return reduce(DataFrame.unionByName, layers)
 
 

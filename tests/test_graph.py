@@ -415,14 +415,20 @@ def _bfs_oracle_rows(d):
          + [(s, s + 1) for s in range(10, 39, 2)] + [(39, 50), (50, 51)]),
         # a path longer than BFS_MAX_HOPS: the tail is cut by the bound
         ("long_path", [(i, i + 1) for i in range(graph.BFS_MAX_HOPS + 4)]),
+        # the source's component (a 5-path) is the smaller of two, so the
+        # reached count never equals |V| and the loop ends on the empty
+        # layer
+        ("two_components", [(i, i + 1) for i in range(4)]
+         + [(i, i + 1) for i in range(100, 119)]),
     ],
 )
 def test_bfs_hops_two_layer_anti_join_matches_oracle(spark, tmp_path,
                                                     name, edges):
     """Each hop excludes only the previous two layers (valid because the
-    adjacency is symmetric); on graphs with same-layer edges, a hub, and
-    reachable nodes beyond the hop bound, the result must equal the
-    recursive-CTE oracle run on DuckDB."""
+    adjacency is symmetric); on graphs with same-layer edges, a hub,
+    reachable nodes beyond the hop bound, and vertices the source cannot
+    reach, the result must equal the recursive-CTE oracle run on
+    DuckDB."""
     d = _lineitem_dir(spark, tmp_path, name, [list(e) for e in edges])
     got = sorted(tuple(r) for r in graph.bfs_hops(spark, d).collect())
     release_persisted()
@@ -454,13 +460,34 @@ def test_bfs_hops_zero_hops_returns_source_only(spark, sf_dir):
     assert got == [(src, 0)]
 
 
+def _bfs_build_jobs(spark, sf_dir, **kwargs):
+    """Spark jobs run while bfs_hops builds its result (the eager loop,
+    not the final action)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"bfs_hops_build_{uuid.uuid4().hex}"  # the tracker keeps old groups
+    sc.setJobGroup(group, "bfs_hops build")
+    try:
+        graph.bfs_hops(spark, sf_dir, **kwargs)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        release_persisted()
+
+
 def test_bfs_hops_build_job_budget(spark, sf_dir):
-    """Build-layer guard: building bfs_hops' result (the eager loop, not
-    the final action) runs at most 13 Spark jobs on this fixture — the
-    adjacency materialization, which also yields the source, then about
-    four per later hop (join, exchange, anti-join side, checkpoint); the
-    lazy hop-1 lookup costs none.  Stages map to jobs differently without
-    AQE, so the guard is AQE-only."""
+    """Build-layer guard: building bfs_hops' result runs at most 8 Spark
+    jobs on this fixture.  The source reaches every vertex by hop 2, so
+    the build is the adjacency materialization (the persist's cache
+    stage and the noop write whose Observation yields |V|, the source
+    and its degree) plus the hop-2 layer (join, exchange, anti-join
+    side, checkpoint); the lazy hop-1 lookup costs none, and the reached
+    count stops the loop before a hop-3 round that would come back
+    empty.  Stages map to jobs differently without AQE, so the guard is
+    AQE-only."""
     import os
 
     if os.environ.get("SPARK_GRAFT_AQE") == "0":
@@ -468,15 +495,50 @@ def test_bfs_hops_build_job_budget(spark, sf_dir):
     from airflow_postgres_to_s3_pipeline_spark.catalog import table
 
     table(spark, sf_dir, "lineitem")  # the catalog's one-time schema read
-    sc = spark.sparkContext
-    group = "bfs_hops_build_budget"
-    sc.setJobGroup(group, "bfs_hops build")
+    jobs = _bfs_build_jobs(spark, sf_dir)
+    assert 0 < jobs <= 8, f"{jobs} build jobs"
+
+
+def test_bfs_hops_hop_join_shuffles_only_the_frontier(spark, sf_dir,
+                                                      monkeypatch):
+    """With broadcasts off (the plan a frontier too big to broadcast
+    gets), no hop re-shuffles the adjacency: the persisted adjacency
+    keeps the groupBy's hash(src) partitioning, so the one exchange
+    keyed on src is the frontier's."""
+    hops = []
+    real = graph.checkpoint
+
+    def spy(df, *args):
+        hops.append(df)
+        return real(df, *args)
+
+    monkeypatch.setattr(graph, "checkpoint", spy)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
     try:
         graph.bfs_hops(spark, sf_dir)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        plans = [df._jdf.queryExecution().executedPlan().toString()
+                 for df in hops]
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set(key, before)
         release_persisted()
-    assert 0 < len(jobs) <= 13, f"{len(jobs)} build jobs"
+    assert plans
+    for plan in plans:
+        assert plan.count("Exchange hashpartitioning(src") == 1, plan
+
+
+def test_bfs_hops_star_source_stops_after_hop_one(spark, tmp_path):
+    """A star whose center is the source, with more leaves than
+    ADJ_CHUNK: hop 1 reaches every vertex, so the build runs exactly the
+    jobs of the same call bounded at one hop.  That needs the source's
+    whole degree (1500), not the size of its first adjacency chunk."""
+    leaves = 1500
+    assert leaves > graph.ADJ_CHUNK
+    d = _lineitem_dir(spark, tmp_path, "star",
+                      [[0, leaf] for leaf in range(1, leaves + 1)])
+    got = sorted(tuple(r) for r in graph.bfs_hops(spark, d).collect())
+    release_persisted()
+    assert got == sorted(_bfs_oracle_rows(d))
+    assert len(got) == 1 + leaves
+    assert _bfs_build_jobs(spark, d) == _bfs_build_jobs(spark, d, max_hops=1)

@@ -18,7 +18,8 @@ sys.path.insert(0, os.path.join(bench.REPO, "tools"))
 import ab  # noqa: E402
 
 LINE = re.compile(
-    r"(\S+) +(current|old|conf) +cold= *([\d.]+) min= *([\d.]+) runs=\[([\d., ]+)\]"
+    r"(\S+) +(current|old|conf) +median= *([\d.]+) min= *([\d.]+) "
+    r"runs=\[([\d., ]+)\]"
 )
 
 
@@ -45,6 +46,28 @@ def test_ab_prints_one_line_per_variant(spark, sf_dir, capsys, variant):
         assert len(runs) == 1
         assert float(m[3]) == float(m[4]) == runs[0] > 0
     assert spark.conf.get(key) == before  # conf variant restored
+
+
+def test_ab_runs_each_variant_once_untimed_first(spark, sf_dir, capsys,
+                                                 monkeypatch):
+    """Every variant runs once before the timed rounds and that run is
+    left out, so ``current`` (first in each round) does not absorb the
+    entry's first-run cost; the median is over the timed runs only."""
+    calls = []
+
+    def fake_timed_noop(spark, build):
+        calls.append(spark.sparkContext.getLocalProperty("spark.job.description"))
+        return float(len(calls))
+
+    monkeypatch.setattr(ab, "timed_noop", fake_timed_noop)
+    name = "pricing_summary"
+    ab.ab(spark, sf_dir, [name], 2, confs={"spark.sql.shuffle.partitions": "3"})
+    assert calls == [f"current: {name}", f"conf: {name}"] * 3
+    parsed = [LINE.fullmatch(line)
+              for line in capsys.readouterr().out.splitlines()]
+    assert [(m[2], float(m[3]), m[5]) for m in parsed] == [
+        ("current", 4.0, "3.0, 5.0"), ("conf", 5.0, "4.0, 6.0")
+    ]
 
 
 def test_timed_noop_times_build_and_releases_its_persists(spark):

@@ -10,8 +10,10 @@ adds variant ``old``: the function of the same name in FILE, a copy of
 the module that defines the entry (e.g. ``git show HEAD:path/to/module.py
 > /tmp/old.py``).  ``--conf`` adds variant ``conf``: the entry with the
 given SQL confs set around each of its runs.  Variants interleave per
-round, ``current`` first.  One line per variant per entry: name, variant,
-cold (first run), min and all runs.  Runs per variant:
+round, ``current`` first; the first round is an untimed warm-up, so no
+variant absorbs the entry's first-run cost (persist builds, Python-worker
+forks).  One line per variant per entry: name, variant, median and min
+of the timed runs, and the timed runs.  Timed runs per variant:
 SPARK_GRAFT_BENCH_RUNS (default 3).  Cross-session comparisons need
 bench.py's idle gate.
 """
@@ -21,6 +23,7 @@ from __future__ import annotations
 import argparse
 import importlib.util
 import os
+import statistics
 import sys
 from functools import partial
 
@@ -40,11 +43,11 @@ def load_module(path: str):
 
 def ab(spark, sf_dir: str, names: list[str], n_runs: int,
        old=None, confs: dict[str, str] | None = None) -> None:
-    """Time each registry entry ``n_runs`` times per variant and print one
-    line per variant.  ``old`` is a module from :func:`load_module` whose
-    same-named function is variant ``old``; ``confs`` run variant
-    ``conf``.  Variant ``current`` is the working tree at the session's
-    confs."""
+    """Run each registry entry once untimed and then ``n_runs`` times
+    timed per variant, and print one line per variant.  ``old`` is a
+    module from :func:`load_module` whose same-named function is variant
+    ``old``; ``confs`` run variant ``conf``.  Variant ``current`` is the
+    working tree at the session's confs."""
     from airflow_postgres_to_s3_pipeline_spark import registry
 
     for name in names:
@@ -55,7 +58,7 @@ def ab(spark, sf_dir: str, names: list[str], n_runs: int,
         if confs:
             variants["conf"] = (fn, confs)
         runs = {v: [] for v in variants}
-        for _ in range(n_runs):
+        for _ in range(1 + n_runs):
             for v, (f, c) in variants.items():
                 spark.sparkContext.setJobDescription(f"{v}: {name}")
                 with session_confs(spark, c):
@@ -63,8 +66,9 @@ def ab(spark, sf_dir: str, names: list[str], n_runs: int,
                         round(timed_noop(spark, partial(f, spark, sf_dir)), 3)
                     )
         for v, r in runs.items():
-            print(f"{name:36s} {v:7s} cold={r[0]:7.3f} min={min(r):7.3f} "
-                  f"runs={r}", flush=True)
+            r = r[1:]  # drop the warm-up round
+            print(f"{name:36s} {v:7s} median={statistics.median(r):7.3f} "
+                  f"min={min(r):7.3f} runs={r}", flush=True)
 
 
 def main() -> int:

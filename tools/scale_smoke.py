@@ -148,7 +148,7 @@ def main() -> int:
                      "vector_lsh_near_dup", "vector_lsh_hub",
                      "vector_semantic_dedup",
                      "vector_kmeans", "vector_knn_ivf",
-                     "vector_pq_encode_hof", "vector_pq_encode_gemm",
+                     "vector_pq_encode_gemm",
                      "vector_incremental_dedup", "vector_incremental_hub",
                      "vector_incremental_hub_near",
                      "vector_ivfpq_refine",
@@ -304,38 +304,23 @@ def main() -> int:
                 spark, d, every=max(50, int(nv_km ** 0.5))),
             corpus=(write_vectors, nv_km))
 
-        # PQ corpus-encode build tiers — HOF fold (CodegenFallback,
-        # n x m x ksub x subd interpreted steps) vs numpy cogroup GEMM
-        # (bit-identical codes; the build you'd ship)
+        # PQ corpus encode — the numpy cogroup GEMM build; its codes are
+        # pinned bit-identical to the HOF fold encode by the unit tests
+        # (tests/test_similarity.py), so the fold is not timed here
         from airflow_postgres_to_s3_pipeline_spark.catalog import (
             table as _table,
         )
 
-        def _pq_vecs(d):
-            return _table(spark, d, "embeddings").select(
+        def pq_gemm(d):
+            e = _table(spark, d, "embeddings").select(
                 "vec_id", similarity.to_double_array("embedding").alias("v")
             )
-
-        def pq_hof(d):
-            e = _pq_vecs(d)
-            packed = similarity._pq_codebook(e)
-            return (
-                e.repartition(spark.sparkContext.defaultParallelism)
-                .crossJoin(F.broadcast(packed))
-                .withColumn("_cb", similarity._pq_cb_col())
-                .select("vec_id", similarity._pq_codes_col().alias("codes"))
-            )
-
-        def pq_gemm(d):
-            e = _pq_vecs(d)
             packed = similarity._pq_codebook(e)
             return similarity.pq_encode_gemm(
                 e, packed, spark.sparkContext.defaultParallelism
             )
 
         nv_pq = min(n, 200_000)
-        run("vector_pq_encode_hof", nv_pq, pq_hof,
-            corpus=(write_vectors, nv_pq))
         run("vector_pq_encode_gemm", nv_pq, pq_gemm,
             corpus=(write_vectors, nv_pq))
 
