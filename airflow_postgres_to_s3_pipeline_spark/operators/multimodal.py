@@ -117,9 +117,11 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # Spread the single local parquet file across Python workers; a real
     # corpus arrives pre-split, so this repartition is local-bench-only
-    # parallelism, not an extra production shuffle.  Capped at 8: each
-    # partition spawns an Arrow python worker, and at this payload size
-    # worker spin-up dominates past that.
+    # parallelism, not an extra production shuffle.  Capped at 8 (here and
+    # at the three other multimodal sites): each partition is one Arrow
+    # Python task with a fixed cost of ~60ms under the engine daemon.  The
+    # cap was set when that cost was ~310ms (docs/SCALE.md "Python-worker
+    # task start"); moving it needs its own A/B.
     d = table(spark, sf_dir, "documents").repartition(
         min(spark.sparkContext.defaultParallelism, 8)
     )

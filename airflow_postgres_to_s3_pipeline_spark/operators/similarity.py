@@ -113,9 +113,11 @@ def _cogroup_np(left: DataFrame, right: DataFrame, key: str, kernel,
 
 # rows per GEMM cogroup shard below which the per-task Python-worker /
 # Arrow round-trip costs more than the numpy kernel it feeds (the kernel
-# on a 256 x 64 fp64 chunk is sub-millisecond; a task round-trip is
-# ~20-30ms).  Only a lower bound on rows-per-shard — the shard count is
-# still capped at defaultParallelism, so big corpora keep every core busy.
+# on a 256 x 64 fp64 chunk is sub-millisecond; a Python task's fixed cost
+# is ~60ms under the engine daemon, ~310ms before it: 4-core host,
+# docs/SCALE.md "Python-worker task start").  Only a lower bound on
+# rows-per-shard — the shard count is still capped at defaultParallelism,
+# so big corpora keep every core busy.
 GEMM_SHARD_TARGET_ROWS = 256
 
 

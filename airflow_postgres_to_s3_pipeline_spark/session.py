@@ -33,6 +33,9 @@ _MB = 1024 * 1024
 # recursion still dies, just not a linear walk over a real fact table.
 CTE_ROW_LIMIT = 1_000_000_000
 
+# the directory that holds this package, for the Python workers' sys.path
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "airflow-postgres-to-s3-pipeline-spark",
@@ -45,6 +48,12 @@ def get_spark(
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default: this host's
     CPU count); on a real cluster ``master`` comes from spark-submit and
     this arg is ignored.
+
+    Python workers run under the engine's daemon module (``pyworker``),
+    which spares each task the re-read of ``pyspark.zip``; the package root
+    leads ``spark.executorEnv.PYTHONPATH`` so the workers find it from any
+    working directory.  Sessions built elsewhere, such as the driver
+    harness's own session, keep Spark's default daemon.
     """
     host_cpus = os.cpu_count() or 1
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus))
@@ -84,11 +93,18 @@ def get_spark(
     # (e.g. spark.io.compression.codec=zstd on a real cluster): semicolon-
     # separated k=v pairs.  Local default is EMPTY so the driver's bench
     # stays comparable; production values are an env knob, not a code edit.
-    for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-        if kv:
-            key, value = kv.split("=", 1)
-            builder = builder.config(key, value)
-    for key, value in (extra_conf or {}).items():
+    overrides = dict(
+        kv.split("=", 1)
+        for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";")
+        if kv
+    )
+    overrides.update(extra_conf or {})
+    python_path = overrides.pop("spark.executorEnv.PYTHONPATH", None)
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH",
+        PACKAGE_ROOT + (os.pathsep + python_path if python_path else ""),
+    ).config("spark.python.daemon.module", f"{__package__}.pyworker")
+    for key, value in overrides.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
 
